@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..functions._cache import cycle_persist
+from ..functions._cache import cycle_persist, release
 from ..lake.table import Commit, DataFile, LakeTable, file_may_match
 from .schemas import TRANSCRIPT_KEY
 
@@ -179,6 +179,9 @@ def snapshot_diff(
     full_diff = not (pa & pb)
     key_bounds: list[tuple[str, str, object]] = []
     if full_diff:
+        # nothing to persist here — and nothing an earlier partial diff
+        # persisted may stay cached either
+        release("snapshot_diff.touched")
         touched = None
     else:
         touched = cycle_persist(

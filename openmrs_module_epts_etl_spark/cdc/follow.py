@@ -66,6 +66,10 @@ class TableFollower:
         # pandas-UDF enrichment, config.py's surface); it must preserve the
         # op/lsn/key contract
         self.transform = transform
+        # one handle per table, refreshed each poll: their fence caches then
+        # fold only the commits since the previous poll
+        self._src: LakeTable | None = None
+        self._dst: LakeTable | None = None
         os.makedirs(checkpoint_dir, exist_ok=True)
 
     # ---------------------------------------------------------- checkpoint
@@ -102,7 +106,8 @@ class TableFollower:
     def poll_once(self) -> MergeResult | None:
         """Propagate everything committed upstream since the last poll.
         Returns the downstream MergeResult, or None when already caught up."""
-        src = LakeTable(self.spark, self.src_path)
+        self._src = _refreshed(self._src, self.spark, self.src_path)
+        src = self._src
         last, head = self.last_propagated(), src.version
         if head <= last:
             return None
@@ -116,7 +121,8 @@ class TableFollower:
         feed = changes_as_feed(src, last, head, key=self.key)
         if self.transform is not None:
             feed = self.transform(feed)
-        dst = LakeTable(self.spark, self.dst_path)
+        self._dst = _refreshed(self._dst, self.spark, self.dst_path)
+        dst = self._dst
         if self.mode == "mor":
             from .mor import append_delta
 
@@ -141,3 +147,7 @@ class TableFollower:
                 return out
             out.append(r)
         return out
+
+
+def _refreshed(table: LakeTable | None, spark: SparkSession, path: str) -> LakeTable:
+    return LakeTable(spark, path) if table is None else table.refresh()

@@ -26,6 +26,17 @@ over the same lake format, same event semantics, same fences:
   key-derived), rewriting the table back to one-row-per-key — after which
   reads are plain scans again. Run every K epochs or by delta-file-count
   policy; replay-safe via its own fence.
+- **compaction epochs are fused**: the epoch that triggers a compaction is
+  not appended first (a delta the compaction would read straight back and
+  rewrite). ``compact_with_epoch`` hands its events to the compaction
+  (``events=``), which projects them to delta rows exactly as
+  ``append_delta`` does, unions them with the files it rewrites, runs the
+  same max-``_lsn`` winner selection, and publishes ONE overwrite commit
+  carrying both the epoch's fence and the compaction's — the stage-area
+  resolve-then-load of the reference
+  (api:resolveconflictsinstagearea/processor/ResolveConflictsInStageAreaProcessor.java:26-66).
+  Per K epochs that saves one data write, one commit and the read-back of
+  the epoch's delta.
 
 Choosing a mode: CoW when reads dominate and epochs are large; MoR when
 ingest throughput/latency dominates and a compaction window exists. The
@@ -35,7 +46,7 @@ checkpoint, and oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..lake.table import Commit, LakeTable
@@ -91,6 +102,42 @@ def _dedupe_for_table(
     return dedupe_latest(df, key=key, order_col=order_col), False
 
 
+def _delta_rows(events: DataFrame, key: list[str]) -> tuple[DataFrame, Observation]:
+    """Project events to MoR delta rows — key + payload (nulled on deletes,
+    except ``ts``), ``_lsn``/``_origin``/``_deleted`` stamps — with the
+    {delta_upsert, delta_delete} counts observed on the projection. Shared
+    by ``append_delta`` and the fused compaction so both report the same
+    counts for the same events."""
+    is_del = F.col("op") == "D"
+    cols = [F.col(k) for k in key]
+    for c in payload_columns(events.schema):
+        if c in key:
+            continue
+        if c == "ts":
+            # ts persists on delete tombstones for partition placement,
+            # exactly like the CoW path
+            cols.append(F.col(c))
+        else:
+            cols.append(F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c))
+    delta = events.select(
+        *cols,
+        F.col("lsn").alias("_lsn"),
+        F.col("origin").alias("_origin"),
+        is_del.alias("_deleted"),
+    )
+    obs = Observation()
+    delta = delta.observe(
+        obs,
+        F.count_if(~F.col("_deleted")).alias("delta_upsert"),
+        F.count_if(F.col("_deleted")).alias("delta_delete"),
+    )
+    return delta, obs
+
+
+def _observed(obs: Observation) -> dict[str, int]:
+    return {k: int(v) for k, v in obs.get.items() if v}
+
+
 def append_delta(
     table: LakeTable,
     events: DataFrame,
@@ -124,32 +171,7 @@ def append_delta(
         batch, clustered = _dedupe_for_table(table, events, key, "lsn", on_null=on_null)
     else:
         batch = events
-    is_del = F.col("op") == "D"
-    cols = [F.col(k) for k in key]
-    for c in payload_columns(events.schema):
-        if c in key:
-            continue
-        if c == "ts":
-            # ts persists on delete tombstones for partition placement,
-            # exactly like the CoW path
-            cols.append(F.col(c))
-        else:
-            cols.append(F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c))
-    delta = batch.select(
-        *cols,
-        F.col("lsn").alias("_lsn"),
-        F.col("origin").alias("_origin"),
-        is_del.alias("_deleted"),
-    )
-
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    delta = delta.observe(
-        obs,
-        F.count_if(~F.col("_deleted")).alias("delta_upsert"),
-        F.count_if(F.col("_deleted")).alias("delta_delete"),
-    )
+    delta, obs = _delta_rows(batch, key)
 
     # additive evolution before the write so new columns survive the
     # projection to table schema (same order of operations as LakeTable.append)
@@ -157,7 +179,7 @@ def append_delta(
     if new_schema is not None:
         table._commit.schema_json = new_schema.json()
     added, _ = table.write_data_files(delta, arrange=not clustered)
-    applied = {k: int(v) for k, v in obs.get.items() if v}
+    applied = _observed(obs)
     commit = table.commit(
         added, epoch=epoch, new_schema=new_schema,
         metrics={"applied": applied, "mode": "mor-delta"},
@@ -185,7 +207,12 @@ def table_changes_as_feed(
     pipeline can consume this table as its binlog — pipeline chaining, the
     lake-side analog of the reference emitting detected_record_info for the
     next stage (SURVEY.md §3.2). Exact row granularity on MoR delta commits
-    (each delta row is one applied event, tombstones → op='D')."""
+    (each delta row is one applied event, tombstones → op='D'). A compaction
+    commit — including a fused compaction epoch, whose events arrive only as
+    compacted rows — returns every row it rewrote: a superset of what
+    changed, which the downstream max-lsn contest absorbs (replayed rows
+    carry their original lsns). For row-exact changes across compactions use
+    changelog.snapshot_diff."""
     inc = table.read_incremental(from_version, to_version, include_hidden=True)
     deleted = F.coalesce(F.col("_deleted"), F.lit(False))
     payload = [c for c in inc.columns if not c.startswith("_")]
@@ -197,6 +224,74 @@ def table_changes_as_feed(
     )
 
 
+def _compact(
+    table: LakeTable,
+    files: list,
+    key: list[str],
+    fence_key: str | None,
+    epoch_id: int | None,
+    keep_tombstones: bool,
+    on_null: str,
+    events: DataFrame | None,
+    events_fence: tuple[str, int] | None,
+    applied: dict,
+    mode: str,
+) -> Commit:
+    """Rewrite ``files`` — unioned with ``events`` projected to delta rows,
+    when given — as their max-``_lsn`` winners in one overwrite commit that
+    carries the events' fence (first) and the compaction's. The events'
+    additive schema widening happens before the read, so old files come
+    back null-filled in the new columns."""
+    new_schema = None
+    if events is not None:
+        delta, obs = _delta_rows(events, key)
+        new_schema = table.evolved_schema(delta.schema)
+        if new_schema is not None:
+            table._commit.schema_json = new_schema.json()
+    df = table.read(files=files, include_hidden=True)
+    if events is not None:
+        df = df.unionByName(delta, allowMissingColumns=True)
+    winners, clustered = _dedupe_for_table(table, df, key, "_lsn", on_null=on_null)
+    if not keep_tombstones:
+        winners = winners.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+    added, _ = table.write_data_files(winners, arrange=not clustered)
+    fences = []
+    if events is not None:
+        applied.update(_observed(obs))
+        if events_fence is not None:
+            fences.append({"fence_key": events_fence[0], "epoch_id": events_fence[1]})
+    if fence_key is not None:
+        fences.append({"fence_key": fence_key, "epoch_id": epoch_id})
+    return table.commit(
+        added,
+        remove_paths={f.path for f in files},
+        epoch=fences,
+        new_schema=new_schema,
+        metrics={"applied": applied, "mode": mode},
+    )
+
+
+def _pending(
+    table: LakeTable,
+    fence_key: str | None,
+    epoch_id: int | None,
+    events: DataFrame | None,
+    events_fence: tuple[str, int] | None,
+) -> tuple[bool, DataFrame | None]:
+    """(compaction already applied?, events still to apply). Events whose
+    fence is already in the log are dropped — re-applying them would leave
+    duplicate (key, lsn) rows, which winner selection keeps both of."""
+    if events is not None and events_fence is not None:
+        if table.epoch_already_applied(*events_fence):
+            events = None
+    done = (
+        fence_key is not None
+        and epoch_id is not None
+        and table.epoch_already_applied(fence_key, epoch_id)
+    )
+    return done, events
+
+
 def compact_partitions(
     table: LakeTable,
     key: list[str] | None = None,
@@ -205,6 +300,8 @@ def compact_partitions(
     epoch_id: int | None = None,
     keep_tombstones: bool = True,
     on_null: str = "error",
+    events: DataFrame | None = None,
+    events_fence: tuple[str, int] | None = None,
 ) -> Commit | None:
     """Partition-selective compaction: collapse versions only in partitions
     holding ≥ ``min_files`` data files — the bounded-I/O form a 100 TB MoR
@@ -221,39 +318,33 @@ def compact_partitions(
     the global winner. Old-spec files in a selected group get rewritten
     under the current spec as a side effect (incremental layout migration).
 
+    ``events`` (with its ``events_fence`` (fence_key, epoch_id)) folds an
+    epoch into the compaction — see ``compact_latest``. The threshold counts
+    committed files only; the events' rows join the dedupe whichever
+    partitions they fall in (the argument above holds for selection ∪
+    events), so a fused epoch commits even when no partition qualifies.
+
     Cost: O(selected partitions), one dedupe shuffle over their rows. Files
     grouped by (spec_id, partition tuple) — stale pre-evolution partition
     values only affect GROUPING granularity, never correctness."""
     key = key or TRANSCRIPT_KEY
-    if fence_key is not None and epoch_id is not None:
-        if table.epoch_already_applied(fence_key, epoch_id):
-            return None
+    done, events = _pending(table, fence_key, epoch_id, events, events_fence)
+    if done and events is None:
+        return None
     groups: dict[tuple, list] = {}
     for f in table.files:
         groups.setdefault((f.spec_id, tuple(sorted(f.partition.items()))), []).append(f)
     selected = [f for g in groups.values() if len(g) >= min_files for f in g]
-    if not selected:
+    if not selected and events is None:
         return None
-    df = table.read(files=selected, include_hidden=True)
-    winners, clustered = _dedupe_for_table(table, df, key, "_lsn", on_null=on_null)
-    if not keep_tombstones:
-        winners = winners.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-    epoch = {"fence_key": fence_key, "epoch_id": epoch_id} if fence_key is not None else None
-    return table.overwrite_partitions(
-        winners,
-        replaced=selected,
-        epoch=epoch,
-        arrange=not clustered,
-        metrics={
-            "applied": {
-                "compacted_files": len(selected),
-                "compacted_partitions": sum(
-                    1 for g in groups.values() if len(g) >= min_files
-                ),
-                "skipped_files": len(table.files) - len(selected),
-            },
-            "mode": "mor-compact-partitions",
-        },
+    applied = {
+        "compacted_files": len(selected),
+        "compacted_partitions": sum(1 for g in groups.values() if len(g) >= min_files),
+        "skipped_files": len(table.files) - len(selected),
+    }
+    return _compact(
+        table, selected, key, fence_key, epoch_id, keep_tombstones, on_null,
+        events, events_fence, applied, "mor-compact-partitions",
     )
 
 
@@ -264,29 +355,73 @@ def compact_latest(
     epoch_id: int | None = None,
     keep_tombstones: bool = True,
     on_null: str = "error",
+    events: DataFrame | None = None,
+    events_fence: tuple[str, int] | None = None,
 ) -> Commit | None:
     """Collapse every key to its winning version; rewrites the whole current
     file set (the MoR analog of the CoW epoch rewrite, paid once per K
     epochs instead of every epoch). Tombstones are kept by default so the
     lsn fence against stale out-of-order inserts survives compaction; drop
     them only past the feed's out-of-order horizon (see vacuum_tombstones).
+
+    ``events`` folds an epoch's raw events into the compaction instead of
+    appending them first: they are projected exactly as ``append_delta``
+    projects them (the commit's ``applied`` carries the same
+    delta_upsert/delta_delete counts), join the winner selection, and the
+    one commit records ``events_fence`` alongside the compaction fence. An
+    events fence already in the log drops the events (the epoch was applied
+    by an earlier append); the compaction itself still runs unless its own
+    fence is there too. Returns None when there is nothing to do.
     """
     key = key or TRANSCRIPT_KEY
-    if fence_key is not None and epoch_id is not None:
-        if table.epoch_already_applied(fence_key, epoch_id):
-            return None
-    files = table.files
-    if not files:
+    done, events = _pending(table, fence_key, epoch_id, events, events_fence)
+    if done and events is None:
         return None
-    df = table.read(files=files, include_hidden=True)
-    winners, clustered = _dedupe_for_table(table, df, key, "_lsn", on_null=on_null)
-    if not keep_tombstones:
-        winners = winners.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-    epoch = {"fence_key": fence_key, "epoch_id": epoch_id} if fence_key is not None else None
-    return table.overwrite_partitions(
-        winners,
-        replaced=files,
-        epoch=epoch,
-        arrange=not clustered,
-        metrics={"applied": {"compacted_files": len(files)}, "mode": "mor-compact"},
+    files = table.files
+    if not files and events is None:
+        return None
+    return _compact(
+        table, files, key, fence_key, epoch_id, keep_tombstones, on_null,
+        events, events_fence, {"compacted_files": len(files)}, "mor-compact",
+    )
+
+
+def compact_with_epoch(
+    table: LakeTable,
+    events: DataFrame,
+    fence_key: str,
+    epoch_id: int,
+    compact_fence_key: str,
+    compact_epoch_id: int,
+    key: list[str] | None = None,
+    min_files: int | None = None,
+    on_null: str = "error",
+) -> MergeResult:
+    """Apply a compaction epoch in one commit: ``events`` (fenced by
+    (fence_key, epoch_id)) folded into the periodic compaction (fenced by
+    (compact_fence_key, compact_epoch_id)) — whole-table ``compact_latest``,
+    or ``compact_partitions`` when ``min_files`` is set. The batch pipeline
+    and the streaming runner call this on every K-th epoch instead of
+    ``append_delta``.
+
+    Returns the epoch's MergeResult with the same applied counts
+    ``append_delta`` would report. The epoch is ``skipped_epoch`` when its
+    fence was already in the log: a replay after the fused commit (no new
+    version), or a resume after an earlier append-then-compact run died
+    between its two commits (the compaction runs once, the events are not
+    re-applied)."""
+    kw = dict(
+        key=key, fence_key=compact_fence_key, epoch_id=compact_epoch_id,
+        on_null=on_null, events=events, events_fence=(fence_key, epoch_id),
+    )
+    if min_files is not None:
+        commit = compact_partitions(table, min_files=min_files, **kw)
+    else:
+        commit = compact_latest(table, **kw)
+    if commit is None or (fence_key, epoch_id) not in commit.fences:
+        return MergeResult(commit=None, skipped_epoch=True)
+    applied = commit.metrics["applied"]
+    return MergeResult(
+        commit=commit,
+        applied={k: applied[k] for k in ("delta_upsert", "delta_delete") if k in applied},
     )

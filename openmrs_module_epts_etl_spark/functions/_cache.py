@@ -18,13 +18,20 @@ from pyspark.sql import DataFrame
 _live: dict[str, DataFrame] = {}
 
 
-def cycle_persist(tag: str, df: DataFrame) -> DataFrame:
+def release(tag: str) -> None:
+    """Unpersist the call site's live frame, if any — for a call that takes
+    a path which persists nothing, so the previous call's frame does not
+    stay cached until the next persisting call."""
     prev = _live.pop(tag, None)
     if prev is not None:
         try:
             prev.unpersist()
         except Exception:
             pass  # session gone / already unpersisted — nothing to hold onto
+
+
+def cycle_persist(tag: str, df: DataFrame) -> DataFrame:
+    release(tag)
     out = df.persist()
     _live[tag] = out
     return out

@@ -17,8 +17,10 @@ Iceberg-shaped table format, built from scratch:
   are read through the new schema (missing columns → null), mirroring Iceberg
   ``ALTER TABLE ADD COLUMN`` + the reference's flat additive model
   (SURVEY.md §1.3).
-- **Epoch fencing**: each commit can record ``(fence_key, epoch_id)``;
-  re-applying an already-committed epoch is a detectable no-op. This replaces
+- **Epoch fencing**: each commit can record one or more
+  ``(fence_key, epoch_id)`` fences (a MoR compaction epoch records both the
+  epoch's and the compaction's); re-applying an already-committed epoch is
+  a detectable no-op. This replaces
   the reference's interval-checkpoint files + finished-markers
   (api:engine/record_intervals_manager/ThreadRecordIntervalsManager.java:227-254)
   and gives exactly-once sink semantics under foreachBatch replay.
@@ -158,11 +160,22 @@ def _stats_may_match(stats: dict | None, where: list[tuple[str, str, object]]) -
     return True
 
 
+def _fence_list(epoch: dict | list[dict] | None) -> list[dict]:
+    """The ``{"fence_key", "epoch_id"}`` dicts a commit carries: ``epoch``
+    may name one fence or several; entries without a fence_key fence
+    nothing."""
+    if not epoch:
+        return []
+    es = [epoch] if isinstance(epoch, dict) else list(epoch)
+    return [e for e in es if e and e.get("fence_key") is not None]
+
+
 def _apply_commit_fences(fences: set, c: "Commit") -> None:
     """Fold one commit into an accumulating fence set, in log order: a
     rollback commit drops the fences it invalidates and restores the ones it
-    revalidates; an epoch commit adds its fence. Shared by the live-history
-    scan (epoch_already_applied) and snapshot expiration (which replays the
+    revalidates; an epoch commit adds every fence it carries. Shared by the
+    live-history scan (epoch_already_applied), rollback_to_version (fence set
+    at the target vs at the head) and snapshot expiration (which replays the
     same semantics into the sidecar)."""
     m = c.metrics or {}
     if m.get("operation") == "rollback":
@@ -170,9 +183,7 @@ def _apply_commit_fences(fences: set, c: "Commit") -> None:
             fences.discard((e[0], e[1]))
         for e in m.get("revalidated_fences") or []:
             fences.add((e[0], e[1]))
-    e = c.epoch
-    if e and e.get("fence_key") is not None:
-        fences.add((e["fence_key"], e.get("epoch_id")))
+    fences.update(c.fences)
 
 
 def file_may_match(f: DataFile, where: list[tuple[str, str, object]]) -> bool:
@@ -273,7 +284,8 @@ class Commit:
         schema_json: str,
         partition_spec: list[dict],
         files: list[DataFile] | None = None,
-        epoch: dict | None = None,       # {"fence_key": str, "epoch_id": int}
+        # {"fence_key": str, "epoch_id": int}, or a list of them
+        epoch: dict | list[dict] | None = None,
         metrics: dict | None = None,     # lineage/applied counts for this commit
         parent: int | None = None,
         properties: dict | None = None,
@@ -287,13 +299,24 @@ class Commit:
         self.schema_json = schema_json
         self.partition_spec = partition_spec
         self.spec_id = spec_id
-        self.epoch = epoch
+        self._fence_dicts = _fence_list(epoch)
         self.metrics = metrics
         self.parent = parent
         self.properties = properties or {}
         self.manifests = manifests
         self._table_path = table_path
         self._files = files
+
+    @property
+    def epoch(self) -> dict | None:
+        """The commit's first fence (the applied epoch's, on a commit that
+        carries several); see ``fences`` for all of them."""
+        return self._fence_dicts[0] if self._fence_dicts else None
+
+    @property
+    def fences(self) -> list[tuple]:
+        """Every (fence_key, epoch_id) this commit records."""
+        return [(e["fence_key"], e.get("epoch_id")) for e in self._fence_dicts]
 
     @property
     def files(self) -> list[DataFile]:
@@ -325,6 +348,9 @@ class Commit:
             "parent": self.parent,
             "properties": self.properties,
         }
+        if len(self._fence_dicts) > 1:
+            # "epoch" keeps its one-fence shape for every reader of it
+            d["extra_fences"] = self._fence_dicts[1:]
         if self.manifests is not None:
             d["manifests"] = [r.to_json() for r in self.manifests]
         else:
@@ -340,7 +366,7 @@ class Commit:
             files=(
                 [DataFile.from_json(f) for f in d["files"]] if "files" in d else None
             ),
-            epoch=d.get("epoch"),
+            epoch=[d.get("epoch"), *d.get("extra_fences", [])],
             metrics=d.get("metrics"),
             parent=d.get("parent"),
             properties=d.get("properties", {}),
@@ -361,9 +387,9 @@ class CommitConflict(RuntimeError):
 
 
 class EpochAlreadyApplied(CommitConflict):
-    """During an OCC rebase the refreshed log showed this commit's own
-    (fence_key, epoch_id) already applied by a concurrent writer — the whole
-    epoch is a duplicate, not just the version number."""
+    """During an OCC rebase the refreshed log showed one of this commit's own
+    (fence_key, epoch_id) fences already applied by a concurrent writer — the
+    whole epoch is a duplicate, not just the version number."""
 
 
 class LakeTable:
@@ -764,7 +790,7 @@ class LakeTable:
         add: list[DataFile],
         remove_paths: set[str] | None = None,
         new_schema: StructType | None = None,
-        epoch: dict | None = None,
+        epoch: dict | list[dict] | None = None,
         metrics: dict | None = None,
         max_retries: int = 10,
         new_partition_spec: list[PartitionField] | None = None,
@@ -773,14 +799,16 @@ class LakeTable:
         """Publish a new version. Multi-writer safe via optimistic
         concurrency (the reference runs many engines against one destination,
         api:controller/OperationController.java:371-376): on a version
-        collision the loop reloads the log, re-validates — our fence must not
-        have been applied meanwhile, and every file we remove must still be
+        collision the loop reloads the log, re-validates — none of our fences
+        (``epoch``: one fence dict or a list) may have been applied
+        meanwhile, and every file we remove must still be
         live (a concurrent compaction/rewrite of the same files is NOT
         rebase-safe) — re-merges additive schema evolution onto the winner's
         schema, and re-publishes at the next version. Writers touching
         disjoint files/partitions always converge; true write-write conflicts
         surface as CommitConflict after the loop."""
         remove_paths = remove_paths or set()
+        fences = _fence_list(epoch)
         base = self._commit
         for attempt in range(max_retries + 1):
             schema_json = (new_schema or StructType.fromJson(json.loads(base.schema_json))).json()
@@ -839,14 +867,11 @@ class LakeTable:
                 if attempt == max_retries:
                     raise
                 fresh = LakeTable(self.spark, self.path)
-                if (
-                    epoch
-                    and epoch.get("fence_key") is not None
-                    and fresh.epoch_already_applied(epoch["fence_key"], epoch.get("epoch_id"))
-                ):
-                    raise EpochAlreadyApplied(
-                        f"epoch {epoch} committed concurrently at {self.path}"
-                    )
+                for e in fences:
+                    if fresh.epoch_already_applied(e["fence_key"], e.get("epoch_id")):
+                        raise EpochAlreadyApplied(
+                            f"epoch {e} committed concurrently at {self.path}"
+                        )
                 live = {f.path for f in fresh._commit.files}
                 gone = remove_paths - live
                 if gone:
@@ -864,8 +889,12 @@ class LakeTable:
                 base = fresh._commit
                 continue
             self._commit = c
-            if epoch and epoch.get("fence_key") is not None and self._fences is not None:
-                self._fences.add((epoch["fence_key"], epoch.get("epoch_id")))
+            if self._fences is not None:
+                _apply_commit_fences(self._fences, c)
+                if self._fences_at == c.parent:
+                    # no commit slipped in between: the cache now reflects
+                    # the log through ours, so the next check loads nothing
+                    self._fences_at = c.version
             return c
 
     @staticmethod
@@ -937,7 +966,9 @@ class LakeTable:
         )
 
     # ------------------------------------------------------------ utilities
-    def append(self, df: DataFrame, epoch: dict | None = None, metrics: dict | None = None) -> Commit:
+    def append(
+        self, df: DataFrame, epoch: dict | list[dict] | None = None, metrics: dict | None = None
+    ) -> Commit:
         new_schema = self.evolved_schema(df.schema)
         if new_schema is not None:
             self._commit.schema_json = new_schema.json()
@@ -948,7 +979,7 @@ class LakeTable:
         self,
         df: DataFrame,
         replaced: list[DataFile],
-        epoch: dict | None = None,
+        epoch: dict | list[dict] | None = None,
         metrics: dict | None = None,
         new_schema: StructType | None = None,
         arrange: bool = True,

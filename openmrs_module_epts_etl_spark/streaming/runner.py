@@ -98,6 +98,7 @@ class StreamingCdcRunner:
         # always correct, just costlier per redelivery.
         self.suppress_redelivery = suppress_redelivery
         self.batch_results: list = []
+        self._table: LakeTable | None = None
         # Streaming transport check: the session should be built with
         # ``get_spark(profile="streaming")`` — micro-batch shuffles move ~1M
         # rows for tens of ms, where the batch profile's sort-writer
@@ -153,11 +154,34 @@ class StreamingCdcRunner:
     # which the replay-idempotence tests pin down.
     _SLICE_STRIDE = 1 << 20
 
+    def _lake(self, spark: SparkSession) -> LakeTable:
+        """The runner's one handle on the target table, refreshed to the log
+        head. Its fence cache then folds only the commits since the previous
+        micro-batch — a fresh handle per micro-batch re-read the whole commit
+        log each time. The micro-batch's own session drives the I/O."""
+        if self._table is None:
+            self._table = LakeTable(spark, self.table_path)
+        else:
+            self._table.spark = spark
+            self._table.refresh()
+        return self._table
+
     def _apply_batch(self, batch_df, epoch_id: int) -> None:
         cols = [f.name for f in self.feed_schema.fields if f.name != "delivery_seq"]
         batch = batch_df.select(*cols)
+        # compaction cadence stays at micro-batch granularity regardless of
+        # slicing. A compaction epoch's events are folded into the compaction
+        # (one commit carrying both fences, mor.compact_with_epoch); when
+        # sliced, the micro-batch's last slice is the one folded in
+        compact_epoch = (
+            int(epoch_id)
+            if self.mode == "mor"
+            and self.compact_every
+            and (int(epoch_id) + 1) % self.compact_every == 0
+            else None
+        )
         if self.max_offsets_per_trigger is None:
-            self._apply_slice(batch, int(epoch_id))
+            self._apply_slice(batch, int(epoch_id), compact_epoch=compact_epoch)
         else:
             w = int(self.max_offsets_per_trigger)
             # one materialization: the min agg, the window-index distinct and
@@ -198,34 +222,42 @@ class StreamingCdcRunner:
                         sl,
                         int(epoch_id) * self._SLICE_STRIDE + i,
                         fence_suffix=f"-sliced-{w}",
+                        compact_epoch=compact_epoch if i == idx[-1] else None,
+                    )
+                if compact_epoch is not None and not idx:
+                    from ..cdc.mor import compact_latest
+
+                    compact_latest(
+                        self._lake(batch_df.sparkSession),
+                        key=list(self.key),
+                        fence_key=self.fence_key + "-compact", epoch_id=compact_epoch,
                     )
             finally:
                 batch.unpersist()
-        # compaction cadence stays at micro-batch granularity regardless of
-        # slicing (it has its own fence, so replays stay no-ops)
-        if self.mode == "mor" and self.compact_every and (
-            int(epoch_id) + 1
-        ) % self.compact_every == 0:
-            from ..cdc.mor import compact_latest
-
-            compact_latest(
-                LakeTable(batch_df.sparkSession, self.table_path),
-                key=list(self.key),
-                fence_key=self.fence_key + "-compact", epoch_id=int(epoch_id),
-            )
 
     def _apply_slice(
-        self, batch, fence_epoch: int, fence_suffix: str = ""
+        self, batch, fence_epoch: int, fence_suffix: str = "",
+        compact_epoch: int | None = None,
     ) -> None:
-        table = LakeTable(batch.sparkSession, self.table_path)
+        """Apply one (slice of a) micro-batch under its fence; with
+        ``compact_epoch`` set, fold it into that micro-batch's compaction."""
+        table = self._lake(batch.sparkSession)
         fence_key = self.fence_key + fence_suffix
         if self.mode == "mor":
-            from ..cdc.mor import append_delta
+            from ..cdc import mor
 
-            res = append_delta(
-                table, batch, key=list(self.key), fence_key=fence_key,
-                epoch_id=fence_epoch,
-            )
+            if compact_epoch is not None:
+                res = mor.compact_with_epoch(
+                    table, batch, key=list(self.key),
+                    fence_key=fence_key, epoch_id=fence_epoch,
+                    compact_fence_key=self.fence_key + "-compact",
+                    compact_epoch_id=compact_epoch,
+                )
+            else:
+                res = mor.append_delta(
+                    table, batch, key=list(self.key), fence_key=fence_key,
+                    epoch_id=fence_epoch,
+                )
         else:
             res = merge_into(
                 table,

@@ -215,3 +215,18 @@ def test_mor_diff_prunes_unchanged_buckets(spark, tmp_path):
         ["insert"],  # (c0, 1) may not exist in the base feed's state
     )
     assert all(r["conv_id"] == "c0" and r["turn_idx"] == 1 for r in d)
+
+
+def test_full_diff_releases_touched_cache(spark, tmp_path):
+    """A full diff (the versions share no data file) persists nothing, and
+    must not leave a frame an earlier partial diff persisted cached either."""
+    from openmrs_module_epts_etl_spark.functions import _cache
+
+    _, table, versions = _run(spark, str(tmp_path / "cache"), "mor")
+    jsc = spark.sparkContext._jsc
+    snapshot_diff(table, versions[0], versions[1]).count()  # partial: persists
+    assert "snapshot_diff.touched" in _cache._live
+    n_partial = len(jsc.getPersistentRDDs())
+    snapshot_diff(table, 0, versions[1]).count()  # v0 has no files: full diff
+    assert "snapshot_diff.touched" not in _cache._live
+    assert len(jsc.getPersistentRDDs()) == n_partial - 1

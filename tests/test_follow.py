@@ -155,3 +155,29 @@ def test_follower_transform_hook(spark, tmp_path):
     assert roles and all(r == r.upper() for r in roles)
     src_n = LakeTable(spark, f"{tmp}/src").read().count()
     assert dst.read().count() == src_n
+
+
+def test_follower_refreshes_one_handle_per_table(spark, tmp_path, monkeypatch):
+    """Each poll refreshes the follower's two table handles instead of
+    opening new ones, so commit JSON loads per poll stay flat while both
+    logs grow."""
+    tmp = str(tmp_path)
+    feed, pipe, fol = _setup(spark, tmp, dst_mode="mor")
+    loads = [0]
+    real = LakeTable._load_commit
+
+    def counting(self, version):
+        loads[0] += 1
+        return real(self, version)
+
+    per_poll = []
+    for _ in range(3):
+        pipe.run(feed, max_epochs=1)
+        monkeypatch.setattr(LakeTable, "_load_commit", counting)
+        loads[0] = 0
+        assert fol.poll_once() is not None
+        per_poll.append(loads[0])
+        monkeypatch.setattr(LakeTable, "_load_commit", real)
+    assert per_poll[1] == per_poll[2] < per_poll[0]
+    src, dst = LakeTable(spark, f"{tmp}/src"), LakeTable(spark, f"{tmp}/dst")
+    pd.testing.assert_frame_equal(_state(src.read()), _state(read_state(dst)))

@@ -35,7 +35,10 @@ def feed(spark):
     df.unpersist()
 
 
-def _mor_pipe(spark, tmp_path, tag, compact_every=None, dedupe_appends=False):
+def _mor_pipe(
+    spark, tmp_path, tag, compact_every=None, dedupe_appends=False,
+    compact_min_files=None,
+):
     t = LakeTable.create(
         spark, str(tmp_path / tag), transcript_schema(evolved=False),
         [days("ts"), bucket(8, "conv_id")],
@@ -43,7 +46,7 @@ def _mor_pipe(spark, tmp_path, tag, compact_every=None, dedupe_appends=False):
     cfg = PipelineConfig(
         table_path=t.path, checkpoint_dir=str(tmp_path / f"{tag}-ck"),
         batch_size=700, mode="mor", compact_every=compact_every,
-        mor_dedupe_appends=dedupe_appends,
+        mor_dedupe_appends=dedupe_appends, compact_min_files=compact_min_files,
     )
     return t, CdcPipeline(spark, cfg)
 
@@ -245,3 +248,198 @@ def test_pipeline_chaining_via_incremental_read(spark, tmp_path):
     a_state = read_state(a).orderBy(*key).toPandas()
     b_state = b_table.read().select(*a_state.columns).orderBy(*key).toPandas()
     pd.testing.assert_frame_equal(a_state, b_state, check_dtype=False)
+
+
+# ------------------------------------------------------- fused compaction epochs
+FENCE, CFENCE = "cdc-pipeline", "cdc-pipeline-compact"
+
+
+def _epoch_batch(feed, epoch, size=700):
+    lo = epoch * size
+    return feed.filter(
+        (F.col("delivery_seq") >= lo) & (F.col("delivery_seq") < lo + size)
+    ).drop("delivery_seq")
+
+
+def _no_duplicate_versions(table):
+    dup = (
+        table.read(include_hidden=True)
+        .groupBy("conv_id", "turn_idx", "_lsn").count()
+        .filter(F.col("count") > 1)
+    )
+    assert dup.count() == 0, "an epoch's events were applied twice"
+
+
+@pytest.mark.parametrize("min_files", [None, 3], ids=["whole-table", "min-files"])
+def test_fused_compaction_epochs_one_commit_each(spark, tmp_path, feed, min_files):
+    """Every K-th epoch lands as ONE compaction commit carrying the epoch
+    fence and the compaction fence — no delta is appended first — on both
+    compaction routes; state equals the oracle."""
+    pay = payload_columns(feed.drop("delivery_seq").schema)
+    t, pipe = _mor_pipe(
+        spark, tmp_path, f"fused-{min_files}", compact_every=3,
+        compact_min_files=min_files,
+    )
+    results = pipe.run(feed)
+    _assert_matches(spark, t, feed, pay)
+    hist = t.refresh().history()
+    assert len(hist) == 1 + len(results)  # one commit per epoch
+    mode = "mor-compact" if min_files is None else "mor-compact-partitions"
+    fused = [e for e in range(len(results)) if (e + 1) % 3 == 0]
+    assert fused
+    for c in hist[1:]:
+        e = c.epoch["epoch_id"]
+        if e in fused:
+            assert c.metrics["mode"] == mode
+            assert c.fences == [(FENCE, e), (CFENCE, e)]
+            assert results[e].applied and not results[e].skipped_epoch
+            assert results[e].applied == {
+                k: v for k, v in c.metrics["applied"].items()
+                if k in ("delta_upsert", "delta_delete")
+            }
+        else:
+            assert c.metrics["mode"] == "mor-delta" and c.fences == [(FENCE, e)]
+
+
+def test_fused_epoch_counts_match_append_delta_with_widening(spark, tmp_path, feed):
+    """The fused projection is append_delta's: same delta_upsert/delta_delete
+    for the same events, also when the epoch widens the table schema, and
+    the same resulting state."""
+    from openmrs_module_epts_etl_spark.cdc import append_delta
+    from openmrs_module_epts_etl_spark.cdc.mor import compact_with_epoch
+
+    first = _epoch_batch(feed, 0).drop("tool_version", "meta_tokens")  # pre-evolution
+    widening = _epoch_batch(feed, 3)  # delivery 2100..2800: evolved columns
+    assert "tool_version" in widening.columns
+
+    tables = []
+    for tag in ("append", "fused"):
+        t = LakeTable.create(
+            spark, str(tmp_path / tag), transcript_schema(evolved=False),
+            [days("ts"), bucket(8, "conv_id")],
+        )
+        append_delta(t, first, fence_key=FENCE, epoch_id=0)
+        assert "tool_version" not in t.schema.fieldNames()
+        tables.append(t)
+    ref = append_delta(tables[0], widening, fence_key=FENCE, epoch_id=1)
+    res = compact_with_epoch(
+        tables[1], widening, fence_key=FENCE, epoch_id=1,
+        compact_fence_key=CFENCE, compact_epoch_id=1,
+    )
+    assert ref.applied["delta_upsert"] > 0 and ref.applied["delta_delete"] > 0
+    assert res.applied == ref.applied
+    assert "tool_version" in tables[1].refresh().schema.fieldNames()
+    key = ["conv_id", "turn_idx"]
+    a = read_state(tables[0].refresh()).orderBy(*key).toPandas()
+    b = read_state(tables[1]).orderBy(*key).toPandas()
+    assert a["tool_version"].notna().any()
+    pd.testing.assert_frame_equal(a, b[a.columns], check_dtype=False)
+
+
+def test_fused_epoch_killed_before_commit_resumes(spark, tmp_path, feed, monkeypatch):
+    """A kill between write_data_files and commit at a compaction epoch: the
+    resumed run re-applies the epoch, matches the oracle, and the files the
+    dead attempt wrote are in no manifest."""
+    pay = payload_columns(feed.drop("delivery_seq").schema)
+    t, pipe = _mor_pipe(spark, tmp_path, "fused-kill", compact_every=3)
+
+    class Boom(Exception):
+        pass
+
+    written: list[str] = []
+    real_write, real_commit = LakeTable.write_data_files, LakeTable.commit
+
+    def spy_write(self, df, arrange=True):
+        files, rel = real_write(self, df, arrange=arrange)
+        written[:] = [f.path for f in files]
+        return files, rel
+
+    def dying_commit(self, add, *a, **kw):
+        if (kw.get("metrics") or {}).get("mode") == "mor-compact":
+            raise Boom()
+        return real_commit(self, add, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", spy_write)
+    monkeypatch.setattr(LakeTable, "commit", dying_commit)
+    with pytest.raises(Boom):
+        pipe.run(feed)
+    monkeypatch.setattr(LakeTable, "commit", real_commit)
+    orphans = set(written)
+    assert orphans and pipe.load_checkpoint()["last_epoch"] == 1
+
+    CdcPipeline(spark, pipe.config).run(feed)
+    _assert_matches(spark, t, feed, pay)
+    for c in t.refresh().history():
+        assert not orphans & {f.path for f in c.files}
+
+
+def test_fused_epoch_rerun_before_checkpoint_is_skipped(spark, tmp_path, feed):
+    """Fused commit published, checkpoint not yet saved: the rerun finds the
+    epoch fence and adds no version."""
+    t, pipe = _mor_pipe(spark, tmp_path, "fused-rerun", compact_every=3)
+    pipe.run(feed, max_epochs=3)  # epochs 0, 1 and the fused epoch 2
+    v = t.refresh().version
+    assert t._commit.fences == [(FENCE, 2), (CFENCE, 2)]
+    pipe.save_checkpoint({"last_epoch": 1})  # the checkpoint write was lost
+    out = CdcPipeline(spark, pipe.config).run(feed, max_epochs=1)
+    assert len(out) == 1 and out[0].skipped_epoch
+    assert t.refresh().version == v
+
+
+def test_resume_after_append_then_compact_died_between(spark, tmp_path, feed):
+    """A table the two-commit path left with the epoch's delta committed but
+    not its compaction: resume compacts once and does not re-apply the
+    events."""
+    from openmrs_module_epts_etl_spark.cdc import append_delta
+
+    pay = payload_columns(feed.drop("delivery_seq").schema)
+    t, pipe = _mor_pipe(spark, tmp_path, "fused-legacy", compact_every=3)
+    pipe.run(feed, max_epochs=2)
+    append_delta(t.refresh(), _epoch_batch(feed, 2), fence_key=FENCE, epoch_id=2)
+    v = t.version
+
+    out = CdcPipeline(spark, pipe.config).run(feed, max_epochs=1)
+    assert len(out) == 1 and out[0].skipped_epoch
+    t.refresh()
+    assert t.version == v + 1
+    assert t._commit.fences == [(CFENCE, 2)]
+    assert t._commit.metrics["mode"] == "mor-compact"
+    _no_duplicate_versions(t)
+    CdcPipeline(spark, pipe.config).run(feed)
+    _assert_matches(spark, t, feed, pay)
+
+
+def test_rollback_across_fused_commit_reapplies_epoch(spark, tmp_path, feed):
+    from openmrs_module_epts_etl_spark.lake import rollback_to_version
+
+    pay = payload_columns(feed.drop("delivery_seq").schema)
+    t, pipe = _mor_pipe(spark, tmp_path, "fused-rb", compact_every=3)
+    pipe.run(feed, max_epochs=3)
+    v_fused = t.refresh().version
+    rb = rollback_to_version(t, v_fused - 1)
+    assert sorted(map(tuple, rb.metrics["invalidated_fences"])) == [(FENCE, 2), (CFENCE, 2)]
+    fresh = LakeTable(spark, t.path)
+    assert not fresh.epoch_already_applied(FENCE, 2)
+    assert not fresh.epoch_already_applied(CFENCE, 2)
+
+    cfg = PipelineConfig(**{**pipe.config.__dict__, "checkpoint_dir": str(tmp_path / "rb-ck2")})
+    out = CdcPipeline(spark, cfg).run(feed)
+    assert [r.skipped_epoch for r in out[:3]] == [True, True, False]
+    _no_duplicate_versions(t.refresh())
+    _assert_matches(spark, t, feed, pay)
+
+
+def test_expire_snapshots_keeps_both_fused_fences(spark, tmp_path, feed):
+    from openmrs_module_epts_etl_spark.lake import expire_snapshots
+    from openmrs_module_epts_etl_spark.lake.maintenance import load_expired_fences
+
+    t, pipe = _mor_pipe(spark, tmp_path, "fused-exp", compact_every=3)
+    pipe.run(feed)
+    v = t.refresh().version
+    expire_snapshots(t, keep_last=1)
+    kept = load_expired_fences(t)
+    assert {(FENCE, 2), (CFENCE, 2)} <= kept
+    cfg = PipelineConfig(**{**pipe.config.__dict__, "checkpoint_dir": str(tmp_path / "exp-ck2")})
+    out = CdcPipeline(spark, cfg).run(feed)
+    assert out and all(r.skipped_epoch for r in out)
+    assert t.refresh().version == v

@@ -40,6 +40,28 @@ def _runner(spark, feed_dir, tpath, ck):
     )
 
 
+def _assert_fused_compactions(table, fence_key="cdc-stream"):
+    """Each compaction commit carries its micro-batch's applied fence — the
+    last slice's when sliced — then the compaction fence, and every epoch or
+    slice fence appears in exactly one commit (no delta was appended
+    first)."""
+    hist = table.refresh().history()[1:]
+    fused = [c for c in hist if c.metrics["mode"] == "mor-compact"]
+    assert fused
+    applied = [f for c in hist for f in c.fences if f[0] != fence_key + "-compact"]
+    assert len(applied) == len(set(applied))
+    stride = StreamingCdcRunner._SLICE_STRIDE
+    for c in fused:
+        (fk, fe), (ck, ce) = c.fences
+        assert ck == fence_key + "-compact"
+        if fk == fence_key:
+            assert fe == ce
+        else:
+            assert fe // stride == ce
+            assert fe == max(e for k, e in applied if k == fk and e // stride == ce)
+        assert c.metrics["applied"].get("delta_upsert")
+
+
 def test_streaming_replay_matches_oracle(spark, tmp_path, feed_dir):
     t = LakeTable.create(
         spark, str(tmp_path / "t"), transcript_schema(), [days("ts"), bucket(8, "conv_id")]
@@ -119,6 +141,7 @@ def test_streaming_mor_mode_matches_oracle(spark, tmp_path, feed_dir):
     runner.compact_every = 2
     results = runner.run_available_now()
     assert len(results) >= 2
+    _assert_fused_compactions(t)
     feed_pd = spark.read.parquet(feed_dir).drop("delivery_seq", "__batch").toPandas()
     from openmrs_module_epts_etl_spark.cdc.oracle import expected_state_pandas
 
@@ -226,6 +249,7 @@ def test_max_offsets_per_trigger_bounds_apply_size(spark, tmp_path, feed_dir):
     assert len(results) > 3
     for r in results:
         assert sum(r.applied.values()) <= w, r.applied
+    _assert_fused_compactions(t)
     feed_pd = spark.read.parquet(feed_dir).drop("delivery_seq", "__batch").toPandas()
     from openmrs_module_epts_etl_spark.cdc.mor import read_state
     from openmrs_module_epts_etl_spark.cdc.oracle import expected_state_pandas
@@ -415,16 +439,30 @@ def test_stateful_progress_with_idle_ttl(spark, tmp_path, feed_dir):
         .option("maxFilesPerTrigger", 2)
         .parquet(feed_dir)
     )
-    q = (
-        conversation_progress(stream.drop("delivery_seq"), idle_ttl_minutes=60)
-        .writeStream.format("memory")
-        .queryName("conv_progress_ttl")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+    # A ProcessingTimeTimeout asks for a no-data batch after every batch, so
+    # neither availableNow termination nor processAllAvailable would ever see
+    # the stream drained. No-data batches only matter for firing timeouts,
+    # which this TTL never does: turn them off for this query (the conf is
+    # captured when the query starts), drain, then stop.
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(no_data)
+    spark.conf.set(no_data, "false")
+    try:
+        q = (
+            conversation_progress(stream.drop("delivery_seq"), idle_ttl_minutes=60)
+            .writeStream.format("memory")
+            .queryName("conv_progress_ttl")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(no_data, prev)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     upd = spark.sql("select * from conv_progress_ttl").toPandas()
     got = upd.sort_values("n_events").groupby("conv_id").tail(1)
     got = got.sort_values("conv_id").reset_index(drop=True)
@@ -560,3 +598,37 @@ def test_streaming_transport_profile(spark, tmp_path, feed_dir):
         str(tmp_path / "tp_ck2"), transport_profile=False,
     )
     assert r2.transport_warnings == []
+
+
+def test_runner_refreshes_one_table_handle(spark, tmp_path, feed_dir, monkeypatch):
+    """One LakeTable handle per runner, refreshed each micro-batch: commit
+    JSON loads per micro-batch stay flat as the log grows and rise only with
+    the commits another writer adds (a fresh handle per micro-batch re-read
+    the whole log every time)."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), transcript_schema(), [days("ts"), bucket(8, "conv_id")]
+    )
+    runner = _runner(spark, feed_dir, t.path, str(tmp_path / "ck"))
+    runner.mode = "mor"
+    runner.compact_every = 3
+    files = sorted(glob.glob(os.path.join(feed_dir, "**", "*.parquet"), recursive=True))
+    assert len(files) >= 6
+    loads = [0]
+    real = LakeTable._load_commit
+
+    def counting(self, version):
+        loads[0] += 1
+        return real(self, version)
+
+    monkeypatch.setattr(LakeTable, "_load_commit", counting)
+    per_batch = []
+    for e, f in enumerate(files[:6]):
+        if e == 4:  # another writer commits between micro-batches 3 and 4
+            LakeTable(spark, t.path).commit([], metrics={"operation": "noop"})
+        loads[0] = 0
+        runner._apply_batch(spark.read.parquet(f), e)
+        per_batch.append(loads[0])
+    assert t.refresh().version == 7
+    # first: open + full fence scan of v0; then one head refresh each, plus
+    # the one foreign commit folded at micro-batch 4
+    assert per_batch == [2, 1, 1, 1, 2, 1]
