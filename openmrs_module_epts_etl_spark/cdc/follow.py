@@ -34,7 +34,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from ..lake.table import LakeTable
+from ..lake.table import LakeTable, refreshed
 from .changelog import changes_as_feed
 from .merge import MergeResult, merge_into
 from .schemas import TRANSCRIPT_KEY
@@ -106,7 +106,7 @@ class TableFollower:
     def poll_once(self) -> MergeResult | None:
         """Propagate everything committed upstream since the last poll.
         Returns the downstream MergeResult, or None when already caught up."""
-        self._src = _refreshed(self._src, self.spark, self.src_path)
+        self._src = refreshed(self._src, self.spark, self.src_path)
         src = self._src
         last, head = self.last_propagated(), src.version
         if head <= last:
@@ -121,7 +121,7 @@ class TableFollower:
         feed = changes_as_feed(src, last, head, key=self.key)
         if self.transform is not None:
             feed = self.transform(feed)
-        self._dst = _refreshed(self._dst, self.spark, self.dst_path)
+        self._dst = refreshed(self._dst, self.spark, self.dst_path)
         dst = self._dst
         if self.mode == "mor":
             from .mor import append_delta
@@ -147,7 +147,3 @@ class TableFollower:
                 return out
             out.append(r)
         return out
-
-
-def _refreshed(table: LakeTable | None, spark: SparkSession, path: str) -> LakeTable:
-    return LakeTable(spark, path) if table is None else table.refresh()

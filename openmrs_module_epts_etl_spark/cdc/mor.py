@@ -35,8 +35,14 @@ over the same lake format, same event semantics, same fences:
   carrying both the epoch's fence and the compaction's — the stage-area
   resolve-then-load of the reference
   (api:resolveconflictsinstagearea/processor/ResolveConflictsInStageAreaProcessor.java:26-66).
-  Per K epochs that saves one data write, one commit and the read-back of
-  the epoch's delta.
+  On the whole-table route that saves, per K epochs, one data write, one
+  commit and the read-back of the epoch's delta. On the ``min_files``
+  route an epoch counts as one more file in each partition it touches (one
+  job over the events, when some partition is one file short), so the same
+  partitions qualify as after an append; the fused commit then skips the
+  write and read-back of the selected partitions' share of the epoch. When
+  no partition qualifies the epoch is a plain ``append_delta``, as before:
+  nothing is saved, and nothing is added but that job.
 
 Choosing a mode: CoW when reads dominate and epochs are large; MoR when
 ingest throughput/latency dominates and a compaction window exists. The
@@ -51,7 +57,7 @@ from pyspark.sql import functions as F
 
 from ..lake.table import Commit, LakeTable
 from .dedupe import dedupe_latest, dedupe_latest_clustered
-from .merge import MergeResult
+from .merge import HIVE_NULL, MergeResult
 from .schemas import TRANSCRIPT_KEY, payload_columns
 
 
@@ -239,15 +245,17 @@ def _compact(
 ) -> Commit:
     """Rewrite ``files`` — unioned with ``events`` projected to delta rows,
     when given — as their max-``_lsn`` winners in one overwrite commit that
-    carries the events' fence (first) and the compaction's. The events'
+    carries ``events_fence`` (first) and the compaction's fence. The events'
     additive schema widening happens before the read, so old files come
     back null-filled in the new columns."""
     new_schema = None
+    fences = []
     if events is not None:
         delta, obs = _delta_rows(events, key)
         new_schema = table.evolved_schema(delta.schema)
         if new_schema is not None:
             table._commit.schema_json = new_schema.json()
+        fences.append({"fence_key": events_fence[0], "epoch_id": events_fence[1]})
     df = table.read(files=files, include_hidden=True)
     if events is not None:
         df = df.unionByName(delta, allowMissingColumns=True)
@@ -255,11 +263,8 @@ def _compact(
     if not keep_tombstones:
         winners = winners.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
     added, _ = table.write_data_files(winners, arrange=not clustered)
-    fences = []
     if events is not None:
         applied.update(_observed(obs))
-        if events_fence is not None:
-            fences.append({"fence_key": events_fence[0], "epoch_id": events_fence[1]})
     if fence_key is not None:
         fences.append({"fence_key": fence_key, "epoch_id": epoch_id})
     return table.commit(
@@ -271,25 +276,35 @@ def _compact(
     )
 
 
-def _pending(
-    table: LakeTable,
-    fence_key: str | None,
-    epoch_id: int | None,
-    events: DataFrame | None,
-    events_fence: tuple[str, int] | None,
-) -> tuple[bool, DataFrame | None]:
-    """(compaction already applied?, events still to apply). Events whose
-    fence is already in the log are dropped — re-applying them would leave
-    duplicate (key, lsn) rows, which winner selection keeps both of."""
-    if events is not None and events_fence is not None:
-        if table.epoch_already_applied(*events_fence):
-            events = None
-    done = (
-        fence_key is not None
-        and epoch_id is not None
-        and table.epoch_already_applied(fence_key, epoch_id)
+def _unapplied(
+    table: LakeTable, events: DataFrame | None, events_fence: tuple[str, int] | None
+) -> DataFrame | None:
+    """``events``, or None when their fence is already in the log:
+    re-applying them would leave duplicate (key, lsn) rows, which winner
+    selection keeps both of."""
+    if events is None:
+        return None
+    if events_fence is None:
+        raise ValueError("events need their events_fence (fence_key, epoch_id)")
+    return None if table.epoch_already_applied(*events_fence) else events
+
+
+def _partitions_of(table: LakeTable, events: DataFrame) -> set[tuple]:
+    """The (spec_id, sorted partition items) groups ``events`` would be
+    written to under the current spec, in the manifest's string form. One
+    global collect_set job over the events' partition values: a partial set
+    per task and a single final task, no shuffle-partition fan-out."""
+    spec = table.partition_spec
+    if not spec:
+        return {(table.spec_id, ())}
+    values = F.struct(
+        *[
+            F.coalesce(p.expr_fn(p.source).cast("string"), F.lit(HIVE_NULL)).alias(p.name)
+            for p in spec
+        ]
     )
-    return done, events
+    rows = events.select(F.collect_set(values).alias("v")).first()["v"]
+    return {(table.spec_id, tuple(sorted(r.asDict().items()))) for r in rows}
 
 
 def compact_partitions(
@@ -318,28 +333,38 @@ def compact_partitions(
     the global winner. Old-spec files in a selected group get rewritten
     under the current spec as a side effect (incremental layout migration).
 
-    ``events`` (with its ``events_fence`` (fence_key, epoch_id)) folds an
-    epoch into the compaction — see ``compact_latest``. The threshold counts
-    committed files only; the events' rows join the dedupe whichever
-    partitions they fall in (the argument above holds for selection ∪
-    events), so a fused epoch commits even when no partition qualifies.
+    ``events`` folds an epoch into the compaction — see ``compact_latest``.
+    Each partition the events touch counts one file more, the file their
+    append would have added there (one job over the events, run only when
+    some partition is one file short), so a partition qualifies exactly
+    when it would after append_delta. The events' rows join the dedupe
+    whichever partitions they fall in (the argument above holds for
+    selection ∪ events). When no partition qualifies this returns None and
+    the events are NOT applied; the caller appends them
+    (``compact_with_epoch`` does).
 
     Cost: O(selected partitions), one dedupe shuffle over their rows. Files
     grouped by (spec_id, partition tuple) — stale pre-evolution partition
     values only affect GROUPING granularity, never correctness."""
     key = key or TRANSCRIPT_KEY
-    done, events = _pending(table, fence_key, epoch_id, events, events_fence)
-    if done and events is None:
-        return None
+    if fence_key is not None and epoch_id is not None:
+        if table.epoch_already_applied(fence_key, epoch_id):
+            return None
+    events = _unapplied(table, events, events_fence)
     groups: dict[tuple, list] = {}
     for f in table.files:
         groups.setdefault((f.spec_id, tuple(sorted(f.partition.items()))), []).append(f)
-    selected = [f for g in groups.values() if len(g) >= min_files for f in g]
-    if not selected and events is None:
+    # only a partition one file short needs the events' partitions: the
+    # file their append would have added is what makes it qualify
+    short = any(len(g) == min_files - 1 for g in groups.values())
+    touched = _partitions_of(table, events) if events is not None and short else set()
+    chosen = [g for p, g in groups.items() if len(g) + (p in touched) >= min_files]
+    if not chosen:
         return None
+    selected = [f for g in chosen for f in g]
     applied = {
         "compacted_files": len(selected),
-        "compacted_partitions": sum(1 for g in groups.values() if len(g) >= min_files),
+        "compacted_partitions": len(chosen),
         "skipped_files": len(table.files) - len(selected),
     }
     return _compact(
@@ -365,18 +390,21 @@ def compact_latest(
     them only past the feed's out-of-order horizon (see vacuum_tombstones).
 
     ``events`` folds an epoch's raw events into the compaction instead of
-    appending them first: they are projected exactly as ``append_delta``
-    projects them (the commit's ``applied`` carries the same
-    delta_upsert/delta_delete counts), join the winner selection, and the
-    one commit records ``events_fence`` alongside the compaction fence. An
-    events fence already in the log drops the events (the epoch was applied
-    by an earlier append); the compaction itself still runs unless its own
-    fence is there too. Returns None when there is nothing to do.
+    appending them first; ``events_fence`` (fence_key, epoch_id) must come
+    with them. They are projected exactly as ``append_delta`` projects them
+    (the commit's ``applied`` carries the same delta_upsert/delta_delete
+    counts), join the winner selection, and the one commit records
+    ``events_fence`` ahead of the compaction fence. An events fence already
+    in the log drops the events (the epoch was applied by an earlier
+    append) and the compaction runs alone. Returns None when the compaction
+    fence is already in the log (the events are then not applied either)
+    or there is nothing to do.
     """
     key = key or TRANSCRIPT_KEY
-    done, events = _pending(table, fence_key, epoch_id, events, events_fence)
-    if done and events is None:
-        return None
+    if fence_key is not None and epoch_id is not None:
+        if table.epoch_already_applied(fence_key, epoch_id):
+            return None
+    events = _unapplied(table, events, events_fence)
     files = table.files
     if not files and events is None:
         return None
@@ -395,21 +423,26 @@ def compact_with_epoch(
     compact_epoch_id: int,
     key: list[str] | None = None,
     min_files: int | None = None,
+    dedupe: bool = False,
     on_null: str = "error",
 ) -> MergeResult:
-    """Apply a compaction epoch in one commit: ``events`` (fenced by
-    (fence_key, epoch_id)) folded into the periodic compaction (fenced by
+    """Apply a compaction epoch: ``events`` (fenced by (fence_key,
+    epoch_id)) folded into the periodic compaction (fenced by
     (compact_fence_key, compact_epoch_id)) — whole-table ``compact_latest``,
-    or ``compact_partitions`` when ``min_files`` is set. The batch pipeline
-    and the streaming runner call this on every K-th epoch instead of
-    ``append_delta``.
+    or ``compact_partitions`` when ``min_files`` is set — as one commit. The
+    batch pipeline and the streaming runner call this on every K-th epoch
+    instead of ``append_delta``.
 
     Returns the epoch's MergeResult with the same applied counts
-    ``append_delta`` would report. The epoch is ``skipped_epoch`` when its
-    fence was already in the log: a replay after the fused commit (no new
-    version), or a resume after an earlier append-then-compact run died
-    between its two commits (the compaction runs once, the events are not
-    re-applied)."""
+    ``append_delta`` would report. When the compaction does not take the
+    events, they go through ``append_delta`` (with ``dedupe``), which is
+    what the append-then-compact path did with them:
+    - no partition qualifies on the ``min_files`` route: a plain append, and
+      no compaction commit;
+    - the events' fence is already in the log: ``skipped_epoch``. That is a
+      replay after the fused commit (no new version), or a resume after an
+      append-then-compact run died between its two commits (the compaction
+      runs once, the events are not re-applied)."""
     kw = dict(
         key=key, fence_key=compact_fence_key, epoch_id=compact_epoch_id,
         on_null=on_null, events=events, events_fence=(fence_key, epoch_id),
@@ -419,7 +452,10 @@ def compact_with_epoch(
     else:
         commit = compact_latest(table, **kw)
     if commit is None or (fence_key, epoch_id) not in commit.fences:
-        return MergeResult(commit=None, skipped_epoch=True)
+        return append_delta(
+            table, events, key=key, fence_key=fence_key, epoch_id=epoch_id,
+            dedupe=dedupe, on_null=on_null,
+        )
     applied = commit.metrics["applied"]
     return MergeResult(
         commit=commit,

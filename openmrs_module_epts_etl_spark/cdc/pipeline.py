@@ -52,7 +52,9 @@ class PipelineConfig:
     # mor only: every K-th epoch is a compaction epoch — its events are
     # folded into the compaction (mor.compact_with_epoch: one write, one
     # commit carrying both fences) instead of appended as a delta the
-    # compaction would rewrite at once. None: append only, never compact.
+    # compaction would rewrite at once; on the compact_min_files route an
+    # epoch with no qualifying partition is a plain append. None: append
+    # only, never compact.
     compact_every: int | None = 8
     # mor only: when set, the periodic compaction is PARTITION-SELECTIVE —
     # only partitions holding >= this many data files are rewritten
@@ -60,8 +62,8 @@ class PipelineConfig:
     # whole-table compact_latest (small tables / full relayout).
     compact_min_files: int | None = None
     # mor only: pre-collapse each epoch to one row per key before appending
-    # (append_delta(dedupe=True); a compaction epoch is deduped by the
-    # compaction itself, so this has no effect there). Pure compression — read-time/compaction
+    # (append_delta(dedupe=True); no effect on an epoch folded into a
+    # compaction, whose dedupe collapses it anyway). Pure compression — read-time/compaction
     # winner selection resolves per-key versions either way, so final state
     # is identical. Measured at the 32M-event/2-epoch replay (2.7 events per
     # key per epoch, quiet host): ON = 169k/463k events/s at 2/8 cores vs
@@ -170,6 +172,7 @@ class CdcPipeline:
                         compact_fence_key=cfg.fence_key + "-compact",
                         compact_epoch_id=epoch,
                         min_files=cfg.compact_min_files,
+                        dedupe=cfg.mor_dedupe_appends,
                         on_null=cfg.on_null_keys,
                     )
                 else:

@@ -994,3 +994,14 @@ class LakeTable:
             metrics=metrics,
             new_schema=new_schema,
         )
+
+
+def refreshed(table: LakeTable | None, spark: SparkSession, path: str) -> LakeTable:
+    """A long-lived caller's one handle on ``path``: ``table`` switched to
+    ``spark`` and refreshed to the log head, or a new handle when there is
+    none yet. Keeping the handle keeps its fence cache, so each refresh
+    folds only the commits added since the previous one."""
+    if table is None:
+        return LakeTable(spark, path)
+    table.spark = spark
+    return table.refresh()

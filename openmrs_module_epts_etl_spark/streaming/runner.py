@@ -31,7 +31,7 @@ from pyspark.sql.types import StructType
 
 from ..cdc.merge import merge_into
 from ..cdc.schemas import TRANSCRIPT_KEY
-from ..lake.table import LakeTable
+from ..lake.table import LakeTable, refreshed
 
 
 class StreamingCdcRunner:
@@ -98,6 +98,8 @@ class StreamingCdcRunner:
         # always correct, just costlier per redelivery.
         self.suppress_redelivery = suppress_redelivery
         self.batch_results: list = []
+        # one handle on the target table, refreshed per micro-batch: its fence
+        # cache then folds only the commits added since the previous one
         self._table: LakeTable | None = None
         # Streaming transport check: the session should be built with
         # ``get_spark(profile="streaming")`` — micro-batch shuffles move ~1M
@@ -153,18 +155,6 @@ class StreamingCdcRunner:
     # an overlap once) is a no-op by the lsn guard / latest-wins compaction,
     # which the replay-idempotence tests pin down.
     _SLICE_STRIDE = 1 << 20
-
-    def _lake(self, spark: SparkSession) -> LakeTable:
-        """The runner's one handle on the target table, refreshed to the log
-        head. Its fence cache then folds only the commits since the previous
-        micro-batch — a fresh handle per micro-batch re-read the whole commit
-        log each time. The micro-batch's own session drives the I/O."""
-        if self._table is None:
-            self._table = LakeTable(spark, self.table_path)
-        else:
-            self._table.spark = spark
-            self._table.refresh()
-        return self._table
 
     def _apply_batch(self, batch_df, epoch_id: int) -> None:
         cols = [f.name for f in self.feed_schema.fields if f.name != "delivery_seq"]
@@ -227,8 +217,9 @@ class StreamingCdcRunner:
                 if compact_epoch is not None and not idx:
                     from ..cdc.mor import compact_latest
 
+                    self._table = refreshed(self._table, batch_df.sparkSession, self.table_path)
                     compact_latest(
-                        self._lake(batch_df.sparkSession),
+                        self._table,
                         key=list(self.key),
                         fence_key=self.fence_key + "-compact", epoch_id=compact_epoch,
                     )
@@ -241,7 +232,7 @@ class StreamingCdcRunner:
     ) -> None:
         """Apply one (slice of a) micro-batch under its fence; with
         ``compact_epoch`` set, fold it into that micro-batch's compaction."""
-        table = self._lake(batch.sparkSession)
+        self._table = table = refreshed(self._table, batch.sparkSession, self.table_path)
         fence_key = self.fence_key + fence_suffix
         if self.mode == "mor":
             from ..cdc import mor

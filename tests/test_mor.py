@@ -301,6 +301,69 @@ def test_fused_compaction_epochs_one_commit_each(spark, tmp_path, feed, min_file
             assert c.metrics["mode"] == "mor-delta" and c.fences == [(FENCE, e)]
 
 
+def _partitions_of_removed(table):
+    hist = table.refresh().history()
+    before, after = {f.path: f for f in hist[-2].files}, {f.path for f in hist[-1].files}
+    return {tuple(sorted(f.partition.items())) for p, f in before.items() if p not in after}
+
+
+def test_fused_partition_threshold_counts_the_epochs_file(spark, tmp_path, feed):
+    """On the min_files route a folded-in epoch counts as the file its
+    append would have added to each partition it touches: the fused
+    compaction selects exactly the partitions append-then-compact does."""
+    from collections import Counter
+
+    from openmrs_module_epts_etl_spark.cdc import append_delta, compact_partitions
+    from openmrs_module_epts_etl_spark.cdc.mor import compact_with_epoch
+
+    tables = []
+    for tag in ("two-step", "fused"):
+        t = LakeTable.create(
+            spark, str(tmp_path / tag), transcript_schema(evolved=False),
+            [days("ts"), bucket(8, "conv_id")],
+        )
+        for e in (0, 1):
+            append_delta(t, _epoch_batch(feed, e), fence_key=FENCE, epoch_id=e)
+        tables.append(t)
+    two_step, fused = tables
+    per_part = Counter(tuple(sorted(f.partition.items())) for f in fused.files)
+    assert 2 in per_part.values(), "some partition must sit one file short of min_files=3"
+
+    append_delta(two_step, _epoch_batch(feed, 2), fence_key=FENCE, epoch_id=2)
+    assert compact_partitions(two_step, min_files=3, fence_key=CFENCE, epoch_id=2)
+    res = compact_with_epoch(
+        fused, _epoch_batch(feed, 2), fence_key=FENCE, epoch_id=2,
+        compact_fence_key=CFENCE, compact_epoch_id=2, min_files=3,
+    )
+    assert res.commit.fences == [(FENCE, 2), (CFENCE, 2)]
+    chosen = _partitions_of_removed(fused)
+    assert {p for p in chosen if per_part[p] == 2}, "the epoch's file must count"
+    assert chosen == _partitions_of_removed(two_step)
+
+
+def test_fused_partition_route_appends_when_nothing_qualifies(spark, tmp_path, feed):
+    """No partition reaches min_files: a compaction epoch is the plain
+    append it was on the append-then-compact path — no dedupe shuffle, no
+    compaction commit, no compaction fence — and state equals the oracle."""
+    pay = payload_columns(feed.drop("delivery_seq").schema)
+    t, pipe = _mor_pipe(
+        spark, tmp_path, "fused-noq", compact_every=3, compact_min_files=10_000,
+    )
+    results = pipe.run(feed)
+    _assert_matches(spark, t, feed, pay)
+    hist = t.refresh().history()
+    assert len(hist) == 1 + len(results)
+    for e, c in enumerate(hist[1:]):
+        assert c.metrics["mode"] == "mor-delta" and c.fences == [(FENCE, e)]
+        assert results[e].applied and not results[e].skipped_epoch
+
+
+def test_fold_in_events_need_their_fence(spark, tmp_path, feed):
+    t, _ = _mor_pipe(spark, tmp_path, "fused-nofence")
+    with pytest.raises(ValueError, match="events_fence"):
+        compact_latest(t, events=_epoch_batch(feed, 0))
+
+
 def test_fused_epoch_counts_match_append_delta_with_widening(spark, tmp_path, feed):
     """The fused projection is append_delta's: same delta_upsert/delta_delete
     for the same events, also when the epoch widens the table schema, and
