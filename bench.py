@@ -1,888 +1,133 @@
-"""Benchmark harness.
+"""Driver front for the engine benchmark: prints ONE JSON line.
 
-Two parts:
-
-1. **CDC replay throughput at two cluster sizes** (the BASELINE.json north
-   rule): replay an identical deterministically-generated change feed through
-   the full pipeline (dedupe → lsn-guarded MERGE → lake commit) at N=2 and
-   4N=8 pinned cores and report events/sec at both plus the scaling
-   efficiency eff = throughput_4N / (4 × throughput_N).
-
-   Methodology notes (all visible in BENCH.md):
-   - each level runs in its own subprocess with ``sched_setaffinity`` to
-     exactly N cpus, so JVM GC/JIT/IO threads compete inside the budget like
-     they would on an N-core cluster node;
-   - a warmup replay runs before the timed region (JIT/codegen warmup is a
-     per-JVM constant with no per-node analog at cluster scale);
-   - table + shuffle dirs live on tmpfs so the measurement is the engine, not
-     the sandbox's virtual disk;
-   - the sandbox VM itself does not scale linearly: a pinned, perfectly
-     parallel, shuffle-free python busy-loop shows ~0.75-0.9 "efficiency"
-     2→8 cores depending on host load (frequency scaling / co-tenant steal —
-     /proc/cpuinfo is virtualized so it cannot be controlled). bench.py
-     therefore measures that **hardware parallel ceiling inline**, right
-     before the engine runs, and reports raw efficiency, the ceiling, and
-     platform-normalized efficiency (raw/ceiling) side by side;
-   - each level runs REPS times (default 2) and keeps the best wall — the
-     host is shared, and a co-tenant burst during one run otherwise decides
-     the ratio.
-
-2. **Headline queries** at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-   on local[$SPARK_GRAFT_CPUS]: per-query wall seconds, forced through a
-   noop write so the whole plan executes.
-
-Prints ONE JSON line; also refreshes BENCH.md.
+The line carries ``metric`` / ``value`` / ``unit`` / ``queries`` / ``sf``:
+the MoR replay's events/s, and the wall seconds of the HEADLINE driver
+queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS]. Every CDC number comes from perfbench/run.py (see
+SECTIONS); this file only translates its results. A section that fails, or whose
+worst case no longer fits the budget ($SPARK_GRAFT_BENCH_BUDGET_S, default
+1500 s), lands under ``skipped`` with the reason; SIGTERM or the budget alarm
+flushes the partial line. Detail goes to BENCH.json / BENCH.md.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import shutil
 import signal
 import subprocess
 import sys
-import tempfile
 import time
+import traceback
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-TOTAL_CPUS = os.cpu_count() or 32
+PERFBENCH = os.path.join(REPO, "perfbench", "run.py")
+OUT_JSON = os.path.join(REPO, "BENCH.json")
+OUT_MD = os.path.join(REPO, "BENCH.md")
+CALL_BOUND_S = 170  # perfbench's own bound on one call; twice that with --scaling
+MARGIN_S = 30  # perfbench's start and teardown around its bound; ours after the last section
+SECTIONS = [  # (name, contract key for its events/s, perfbench arguments, worst-case s)
+    ("mor", "value", ["mor-replay-skewed", "--trace", "0", "--scaling"], 2 * CALL_BOUND_S),
+    ("cow", "cow_events_per_sec", ["cow-trickle-uniform", "--trace", "0"], CALL_BOUND_S),
+    ("stream", "stream_open_loop_events_per_sec", ["stream-open-loop", "--trace", "0"], CALL_BOUND_S),
+    ("layers", None, ["mor-replay-skewed", "--trace", "1"], CALL_BOUND_S),
+]
+
+_COMPACT: dict = {}  # the contract line, filled in as sections land
+_EMITTED = False
+_CHILDREN: set = set()  # live perfbench processes, for the signal handlers
 
 
 def _log(msg: str) -> None:
     print(f"[bench {time.strftime('%H:%M:%S')}] {msg}", file=sys.stderr, flush=True)
 
 
-def _code_fingerprint() -> str:
-    """Identity of the ENGINE being measured: git tree hash of the package
-    plus the blob hash of __spark_entry__.py, '-dirty' when either differs
-    from HEAD. bench.py itself is NOT part of this hash — the measurement
-    PROTOCOL is fingerprinted separately (``_protocol_fingerprint``, a hash of
-    the feed/replay/calibration source), so a change to pair-validity gates
-    or budget planning never discards prior measurements of byte-identical
-    engine code, while any change to what is actually measured (feed shape,
-    replay loop, calibration probes, query list) still does."""
-    paths = ["openmrs_module_epts_etl_spark", "__spark_entry__.py"]
-    try:
-        hashes = [
-            subprocess.run(
-                ["git", "rev-parse", f"HEAD:{p}"], cwd=REPO,
-                capture_output=True, text=True, check=True,
-            ).stdout.strip()
-            for p in paths
-        ]
-        dirty = subprocess.run(
-            ["git", "status", "--porcelain", "--", *paths],
-            cwd=REPO, capture_output=True, text=True,
-        ).stdout.strip()
-    except Exception:
-        return "unknown"
-    fp = hashlib.sha256("\n".join(hashes).encode()).hexdigest()[:16]
-    return fp + ("-dirty" if dirty else "")
+def _emit_compact() -> None:
+    global _EMITTED
+    if not _EMITTED:
+        _EMITTED = True
+        sys.stdout.flush()
+        print(json.dumps(_COMPACT), flush=True)
 
 
-def _protocol_fingerprint() -> str:
-    """Identity of the measurement PROTOCOL: a hash over the source of every
-    piece that defines WHAT a measurement means — feed spec, epoch sizing,
-    replay loop, child entrypoints, calibration probes, and the headline
-    query list. Two artifacts are comparable (pairs poolable, sections
-    reusable) only when BOTH this and the engine fingerprint match; gate
-    thresholds and budget planning are deliberately excluded, since pair
-    validity is re-derived from each pair's stored calibration numbers under
-    the gates in force at load time."""
-    import inspect
+def _kill_children() -> None:
+    """SIGKILL every live perfbench call with its whole tree (perfbench runs
+    its child and JVM in a session of their own)."""
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    import host
 
-    parts = [
-        inspect.getsource(_feed_spec),
-        inspect.getsource(_batch_size),
-        inspect.getsource(_replay),
-        inspect.getsource(pregenerate_feed),
-        inspect.getsource(cdc_child),
-        inspect.getsource(stream_child),
-        inspect.getsource(_mk_spark),
-        inspect.getsource(_mk_spark_scaled),
-        inspect.getsource(_mk_spark_stream),
-        inspect.getsource(bench_queries),
-        _CAL,
-        _CAL_BW,
-        repr(HEADLINE),
-    ]
-    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+    for root in list(_CHILDREN):
+        for pid in host.tree_pids(root):
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except OSError:
+                pass
 
 
-# Absolute host-speed floors (tasks/sec from the calibration probes). Two
-# layers, both host-signal-only (never the engine's own result):
-#
-# 1. STATIC SANITY floors (env-tunable): catastrophic-steal bound, ~half the
-#    slowest historical quiet-host observation. A window below these is
-#    unambiguously a squeezed host.
-# 2. RELATIVE floors: each window must reach ``_REL_FLOOR`` (default 0.85) of
-#    the FASTEST observation of the same probe across the whole pool record —
-#    every calibration this session (including windows that were skipped for
-#    other reasons) plus every stored pair's calibrations. Rationale: ratio
-#    gates cannot see UNIFORM co-tenant steal (a host running both probes at
-#    70% of idle speed still shows clean hi/lo ratios), but "idle speed" is a
-#    property of the host's best observable state, not a constant — the VM's
-#    clock itself drifts day to day, and a fixed historical floor taken on a
-#    fast day rejects every window on a slower-clocked (but internally
-#    consistent and cleanly-scaling) day, degrading the gate to
-#    "always disturbed". Anchoring to the pool maximum keeps the original
-#    intent — refuse windows where the host is slower than its own attainable
-#    speed — while letting the record itself define that speed. Validity is
-#    still re-derived at load time: once a faster window enters the pool,
-#    earlier pairs measured >15% below it are demoted retroactively.
-_ABS_FLOORS = {
-    "c_lo": ("SPARK_GRAFT_MIN_CAL_LO_ABS", 1.4),
-    "c_hi": ("SPARK_GRAFT_MIN_CAL_HI_ABS", 5.2),
-    "cb_lo": ("SPARK_GRAFT_MIN_BW_LO_ABS", 2.1),
-    "cb_hi": ("SPARK_GRAFT_MIN_BW_HI_ABS", 8.7),
-}
-_REL_FLOOR = float(os.environ.get("SPARK_GRAFT_REL_FLOOR", "0.85"))
-
-# top observations of each probe seen anywhere in the record (pool pairs +
-# every calibration this session, skipped windows included — a fast window
-# that failed a ratio gate still evidences what the host can do). The ANCHOR
-# each relative floor hangs from is the SECOND-fastest observation, not the
-# single maximum: one anomalous turbo/glitch sample would otherwise
-# permanently and retroactively demote (fatal) every pooled pair measured
-# >15% below it — a robust anchor requires the "attainable host speed" to
-# have been observed at least twice.
-_OBS_TOP: dict = {"c_lo": [], "c_hi": [], "cb_lo": [], "cb_hi": []}
+def _on_signal(signum, frame):
+    """Driver SIGTERM (exit 143) or the own budget alarm (exit 0): the
+    partial line goes out before anything else."""
+    _log(f"signal {signum}: emitting the partial result")
+    _emit_compact()
+    _kill_children()
+    os._exit(0 if signum == signal.SIGALRM else 143)
 
 
-def _observe_cal(c_lo=None, c_hi=None, cb_lo=None, cb_hi=None) -> None:
-    for k, v in (("c_lo", c_lo), ("c_hi", c_hi), ("cb_lo", cb_lo), ("cb_hi", cb_hi)):
-        if isinstance(v, (int, float)) and v > 0:
-            top = _OBS_TOP[k]
-            top.append(float(v))
-            top.sort(reverse=True)
-            del top[3:]
-
-
-def _obs_anchor(name: str) -> float:
-    """Robust pool anchor: second-fastest observation (fastest when only one
-    exists, 0 when none)."""
-    top = _OBS_TOP[name]
-    return top[1] if len(top) > 1 else (top[0] if top else 0.0)
-
-
-def _observe_pair_cal(pair: dict, n_lo: int) -> None:
-    cal = pair.get("calibration_tasks_per_sec") or {}
-    bw = pair.get("bw_calibration_tasks_per_sec") or {}
-    lo_k, hi_k, after_k = f"{n_lo}_cores", f"{n_lo * 4}_cores", f"{n_lo}_cores_after"
-    _observe_cal(c_lo=cal.get(lo_k), c_hi=cal.get(hi_k),
-                 cb_lo=bw.get(lo_k), cb_hi=bw.get(hi_k))
-    _observe_cal(c_lo=cal.get(after_k), cb_lo=bw.get(after_k))
-
-
-def _abs_floor(name: str) -> float:
-    env, default = _ABS_FLOORS[name]
-    static = float(os.environ.get(env, str(default)))
-    return max(static, _REL_FLOOR * _obs_anchor(name))
-
-
-def _effective_ceiling(c_lo: float, c_hi: float, c_lo2: float, hi_disturbed) -> float:
-    """Normalization denominator for one pair (clamped to [0.5, 1.0]).
-
-    For a host-stationary pair this is the pair's own measured ceiling:
-    c_hi / (4 × geomean(lo calibrations)). For a HI-SIDE-DISTURBED pair the
-    pair's own c_hi was measured under co-tenant steal, so dividing raw by a
-    ceiling built from it INFLATES normalized — the disturbance deflates the
-    denominator, not just the numerator (the round-3 artifact's best pair hit
-    normalized 1.0 exactly this way). Such pairs instead take the hi
-    calibration from the pool's robust anchor — the host speed undisturbed
-    windows actually demonstrated — which can only raise the ceiling and
-    lower normalized: their normalized stays a LOWER bound, consistent with
-    keeping them as conservative evidence."""
-    c_lo_mean = (c_lo * c_lo2) ** 0.5
-    c_hi_eff = max(c_hi, _obs_anchor("c_hi")) if hi_disturbed else c_hi
-    ceil_u = c_hi_eff / (4.0 * c_lo_mean)
-    return min(max(ceil_u, 0.5), 1.0)
-
-
-def _gate_check(
-    c_lo: float, c_hi: float, c_lo2: float,
-    cb_lo: float, cb_hi: float, cb_lo2: float,
-    min_cache_ceil: float, min_bw_ceil: float,
-) -> tuple[list, list, float, float]:
-    """Host-stationarity gates over one pair's six calibration numbers.
-    Returns (fatal-reasons, deflating-only-reasons, unclamped cache ceiling,
-    unclamped bandwidth ceiling). Pure function of calibration (host)
-    signals — never of the engine's own result — shared by the measurement
-    loop and by ``_regate`` so stored pairs are re-judged identically.
-
-    Failures are classified by the DIRECTION the disturbance can push the
-    pair's raw efficiency (hi_tput / (4 × lo_tput)):
-
-    - LO-SIDE squeeze (lo floors, lo drift, cache ceiling > 1.15 — a lo
-      calibration window slower than the lo level itself) makes the lo level
-      slow and thereby INFLATES raw. Any such failure is FATAL: the number
-      could flatter the engine.
-    - HI-SIDE squeeze (ceilings below the minimum, hi absolute floors) makes
-      the hi level slow and can only DEFLATE raw — steal during the 8-core
-      window lowers the numerator. A pair whose only failures are hi-side is
-      kept as CONSERVATIVE evidence: its raw/normalized understate the
-      engine (the motivating observation: a pair measuring raw 0.848 was
-      discarded for a bandwidth ceiling of 0.789 that the engine itself
-      out-scaled — a disturbance that can only have cost the engine is not
-      grounds to discard the engine's number, only to trust it as a lower
-      bound). Such pairs carry their reasons in ``hi_side_disturbed`` so the
-      artifact says exactly which medians contain understated members."""
-    c_lo_mean = (c_lo * c_lo2) ** 0.5
-    ceil_u = c_hi / (4.0 * c_lo_mean)
-    bw_ceil_u = cb_hi / (4.0 * (cb_lo * cb_lo2) ** 0.5)
-    drift = c_lo2 / c_lo
-    bw_drift = cb_lo2 / cb_lo
-    fatal, deflating = [], []
-    if ceil_u > 1.15:
-        fatal.append(f"cache_ceiling {ceil_u:.3f} > 1.15 (lo squeezed)")
-    elif ceil_u < min_cache_ceil:
-        deflating.append(f"cache_ceiling {ceil_u:.3f} < {min_cache_ceil}")
-    if bw_ceil_u < min_bw_ceil:
-        deflating.append(f"bandwidth_ceiling {bw_ceil_u:.3f} < {min_bw_ceil}")
-    if not (0.8 <= drift <= 1.25):
-        fatal.append(f"lo-calibration drift {drift:.3f} outside [0.8, 1.25]")
-    if not (0.67 <= bw_drift <= 1.5):
-        fatal.append(f"lo-bw-calibration drift {bw_drift:.3f} outside [0.67, 1.5]")
-    for name, val, side in (("c_lo", c_lo_mean, fatal), ("c_hi", c_hi, deflating),
-                            ("cb_lo", (cb_lo * cb_lo2) ** 0.5, fatal),
-                            ("cb_hi", cb_hi, deflating)):
-        floor = _abs_floor(name)
-        if val < floor:
-            side.append(f"absolute {name} calibration {val:.2f} < {floor} tasks/s "
-                        f"(host slower than its own idle speed — co-tenant steal)")
-    return fatal, deflating, ceil_u, bw_ceil_u
-
-
-def _regate(pair: dict, n_lo: int, min_cache_ceil: float, min_bw_ceil: float) -> dict:
-    """Re-derive a stored pair's validity from its own recorded calibration
-    numbers under the CURRENT gates. Tightening a gate retroactively demotes
-    previously-admitted pairs measured on a host that was in fact disturbed
-    (and vice versa) — validity is a property of the host record, not of
-    whichever gate constants happened to be in force when it was measured.
-    Pairs without a full calibration record keep their stored flag."""
-    cal = pair.get("calibration_tasks_per_sec") or {}
-    bw = pair.get("bw_calibration_tasks_per_sec") or {}
-    lo_k, hi_k, after_k = f"{n_lo}_cores", f"{n_lo * 4}_cores", f"{n_lo}_cores_after"
-    try:
-        nums = [cal[lo_k], cal[hi_k], cal[after_k], bw[lo_k], bw[hi_k], bw[after_k]]
-    except KeyError:
-        return pair
-    if not all(isinstance(v, (int, float)) and v > 0 for v in nums):
-        return pair
-    fatal, deflating, _, _ = _gate_check(*nums, min_cache_ceil, min_bw_ceil)
-    out = dict(pair)
-    out["valid"] = not fatal
-    out["invalid_reasons"] = fatal or None
-    out["hi_side_disturbed"] = deflating or None
-    # normalized is re-derived too: a hi-side-disturbed pair's ceiling must
-    # come from the pool's undisturbed anchor, and the anchor may have moved
-    # since the pair was stored (see _effective_ceiling)
-    if isinstance(out.get("raw"), (int, float)):
-        c_lo, c_hi, c_lo2 = nums[0], nums[1], nums[2]
-        ceil = _effective_ceiling(c_lo, c_hi, c_lo2, deflating)
-        out["ceiling"] = round(ceil, 3)
-        out["normalized"] = round(min(out["raw"] / ceil, 1.0), 3)
-    return out
-
-
-class Budget:
-    """Wall-clock planner: the driver runs bench.py under a hard timeout
-    (round 2's run hit it: rc=124, nothing parsed). Sections check
-    ``remaining()`` before starting and degrade (fewer reps / reuse /
-    skip-with-provenance) instead of overrunning; the final JSON line is
-    emitted no matter which sections ran."""
-
-    def __init__(self, total_s: float):
-        self.t0 = time.monotonic()
-        self.total = total_s
-
-    def elapsed(self) -> float:
-        return time.monotonic() - self.t0
-
-    def remaining(self) -> float:
-        return self.total - self.elapsed()
-
-
-# compact-line state, updated as sections land so a SIGTERM (driver timeout)
-# still flushes everything measured so far
-_COMPACT: dict = {}
-_EMITTED = False
-
-# live child PIDs (level/stream subprocesses): the signal handlers reap these
-# before os._exit so a budget alarm never leaves a 32-thread Spark JVM
-# burning the host while the driver moves on to correctness checks
-_CHILDREN: set = set()
-
-# scaling pairs measured so far this run (~7 min of wall each): on a budget
-# alarm or driver SIGTERM these are merged into the on-disk artifact so the
-# next same-fingerprint run's prior-pair pool can reuse them instead of
-# re-measuring — main() clears the list once the final artifact is written
-_PARTIAL: dict = {"fingerprint": None, "protocol": None, "prior": None, "fresh_pairs": []}
-
-
-def _flush_partial_artifact() -> None:
-    """Preserve fresh scaling pairs across a timeout. Only merges into a
-    same-fingerprint artifact (pairs measured under different code must never
-    pool); a fingerprint-mismatched or absent prior gets a minimal artifact
-    explicitly stamped partial."""
-    fresh = _PARTIAL["fresh_pairs"]
-    fp = _PARTIAL["fingerprint"]
-    proto = _PARTIAL["protocol"]
-    if not fresh or not fp or fp == "unknown" or fp.endswith("-dirty"):
-        return
-    prior = _PARTIAL["prior"]
-    try:
-        if (
-            isinstance(prior, dict)
-            and prior.get("code_fingerprint") == fp
-            and prior.get("bench_protocol") == proto
-        ):
-            sc = prior.setdefault("scaling", {})
-            sc["all_pairs"] = (list(fresh) + list(sc.get("all_pairs") or []))[:24]
-            sc["partial_flush"] = True
-            out = prior
-        else:
-            out = {
-                **_COMPACT,
-                "code_fingerprint": fp,
-                "bench_protocol": proto,
-                "partial": True,
-                "scaling": {"all_pairs": list(fresh), "partial_flush": True},
-            }
-        with open(os.path.join(REPO, "BENCH.json"), "w") as fh:
-            json.dump(out, fh)
-        _log(f"flushed {len(fresh)} fresh pair(s) into BENCH.json before exit")
-    except Exception as e:  # a failed flush must never block the stdout line
-        _log(f"partial-artifact flush failed: {e}")
-
-
-def _run_tracked(argv, *, timeout):
-    """subprocess.run with the child PID registered for signal-handler
-    cleanup. Same (stdout, stderr, returncode) surface the callers use."""
-    proc = subprocess.Popen(
-        argv, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True
-    )
+def run_perfbench(args: list[str], timeout: float) -> tuple[int, str, str]:
+    """One perfbench/run.py call → (returncode, stdout, stderr)."""
+    proc = subprocess.Popen([sys.executable, PERFBENCH, "--workload", *args], cwd=REPO,
+                            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     _CHILDREN.add(proc.pid)
     try:
         out, err = proc.communicate(timeout=timeout)
     except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.communicate()
-        raise
+        _kill_children()
+        out, err = proc.communicate()
+        return -9, out, err + f"\nperfbench: killed after {timeout:.0f} s"
     finally:
         _CHILDREN.discard(proc.pid)
-    return subprocess.CompletedProcess(argv, proc.returncode, out, err)
+    return proc.returncode, out, err
 
 
-def _kill_children() -> None:
-    for pid in list(_CHILDREN):
-        try:
-            os.kill(pid, signal.SIGKILL)
-        except OSError:
-            pass
+def perfbench(args: list[str], bound_s: float) -> dict:
+    """Run perfbench and read what it prints: the last JSON line (the result
+    object), the ``events_per_s`` line, the cores and the host fingerprint.
+    Raises RuntimeError with perfbench's own reason when it fails."""
+    rc, out, err = run_perfbench(args, bound_s + MARGIN_S)
+    lines = out.splitlines()
+    results = [ln for ln in lines if ln.startswith("{")]
+    if rc != 0 or not results:
+        said = [ln for ln in err.splitlines() if ln.startswith("perfbench:")] or err.splitlines()
+        raise RuntimeError(f"perfbench exited {rc}: {said[-1] if said else 'no output'}")
+    sec = json.loads(results[-1])
+    sec["metrics"] = {k: m["value"] for k, m in sec["metrics"].items()}
+    for ln in lines:
+        if ln.startswith("events_per_s "):
+            sec["events_per_s"] = float(ln.split()[1])
+        elif ln.startswith("# ") and " cores=" in ln:
+            sec["cores"] = int(ln.split(" cores=")[1].split()[0])
+        elif ln.startswith("host: "):
+            sec["host"] = json.loads(ln[len("host: "):])
+    return sec
 
 
-def _emit_compact() -> None:
-    global _EMITTED
-    if _EMITTED:
-        return
-    _EMITTED = True
-    sys.stdout.flush()
-    print(json.dumps(_COMPACT), flush=True)
-
-
-def _on_term(signum, frame):  # driver timeout: flush the partial result line
-    _log(f"signal {signum} — emitting partial result")
-    _emit_compact()
-    _flush_partial_artifact()
-    _kill_children()
-    os._exit(143)
-
-
-def _on_alarm(signum, frame):
-    """Hard self-deadline at the wall-clock budget: whatever the per-section
-    estimates got wrong (a wedged in-process feed generation, a calibration
-    subprocess stall), the contract line still goes out BEFORE the driver's
-    own timeout fires — rc=0 with partial sections beats r2's rc=124 with
-    nothing parsed."""
-    _log("budget alarm — emitting partial result and exiting 0")
-    _emit_compact()
-    _flush_partial_artifact()
-    _kill_children()
-    os._exit(0)
-
-
-def _mk_spark(cores: int, app: str, local_dir: str | None = None):
+def _mk_spark(cores: int, app: str):
     from openmrs_module_epts_etl_spark.session import get_spark
 
-    extra = {"spark.local.dir": local_dir} if local_dir else None
-    return get_spark(app, master=f"local[{cores}]", shuffle_partitions=64, extra_conf=extra)
-
-
-def _mk_spark_scaled(cores: int, app: str, local_dir: str | None = None, ui: bool = False):
-    from openmrs_module_epts_etl_spark.session import get_spark
-
-    extra = {"spark.local.dir": local_dir} if local_dir else {}
-    if ui:
-        # scaling levels expose the UI REST API so the child can report the
-        # stage-level CPU bill alongside wall time (spark.ui.port=0 → any
-        # free port; uiWebUrl tells us which). Overhead is the appStatus
-        # store the listener bus already feeds — measured indistinguishable
-        # from ui.enabled=false at the pair shape (tools/profile_stages.py
-        # ran with the UI on and matched bench's UI-off numbers).
-        extra.update({"spark.ui.enabled": "true", "spark.ui.port": "0"})
-    return get_spark(
-        app, master=f"local[{cores}]", shuffle_partitions=max(4 * cores, 8),
-        extra_conf=extra or None,
-    )
-
-
-def _ui_stage_ids(spark) -> set | None:
-    """Completed stage ids so far (None when the REST API is unreachable)."""
-    try:
-        import urllib.request
-
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages", timeout=15) as r:
-            return {s["stageId"] for s in json.load(r)}
-    except Exception as e:
-        _log(f"stage-id capture failed: {e}")
-        return None
-
-
-def _ui_metrics(spark, before: set, cores: int) -> dict | None:
-    """Aggregate stage metrics for every stage not in ``before`` — the timed
-    region's CPU bill and utilization, from the same REST stage endpoint
-    tools/profile_stages.py uses. Two host-supply diagnostics ride along:
-
-    - ``exec_cpu_sec`` (executorCpuTime) counts cycles the guest actually
-      executed — co-tenant steal and scheduler preemption do NOT bill here,
-      while memory-stall cycles DO. Equal CPU bills at both pair levels
-      (cpu_parity ≈ 1) therefore prove the engine did identical work with no
-      contention inflation; the raw wall ratio then measures host supply,
-      not engine demand.
-    - ``cpu_over_run`` = exec_cpu / exec_run: executorRunTime is task WALL
-      time (steal included), so this is the fraction of occupied core-time
-      the host actually delivered to the guest. It is the direct observable
-      for the probe-blind host phase BASELINE.md documents (windows where
-      both calibration probes scale cleanly yet the 8-core engine level runs
-      25% slow): the depressed window shows up as a depressed hi-side
-      cpu_over_run, measured during the engine run itself rather than
-      minutes around it."""
-    try:
-        import urllib.request
-
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=15
-        ) as r:
-            stages = json.load(r)
-        run = cpu = wall = 0.0
-        for s in stages:
-            if before and s["stageId"] in before:
-                continue
-            try:
-                t0 = time.strptime(s["firstTaskLaunchedTime"][:19], "%Y-%m-%dT%H:%M:%S")
-                t1 = time.strptime(s["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-                wall += max(time.mktime(t1) - time.mktime(t0), 0.001)
-            except (KeyError, ValueError):
-                pass
-            run += s.get("executorRunTime", 0) / 1000.0
-            cpu += s.get("executorCpuTime", 0) / 1e9
-        if run <= 0:
-            return None
-        return {
-            "exec_cpu_sec": round(cpu, 1),
-            "exec_run_sec": round(run, 1),
-            "stage_util": round(run / (cores * wall), 3) if wall else None,
-            "cpu_over_run": round(cpu / run, 3),
-        }
-    except Exception as e:
-        _log(f"stage-metric capture failed: {e}")
-        return None
-
-
-def _mk_spark_stream(cores: int, app: str, local_dir: str | None = None):
-    """Streaming-profile session (session.py STREAMING_TRANSPORT): the stock
-    200-partition writer crossover, measured +15% on the micro-batch path —
-    the session shape a streaming deployment's spark-submit would build."""
-    from openmrs_module_epts_etl_spark.session import get_spark
-
-    extra = {"spark.local.dir": local_dir} if local_dir else None
-    return get_spark(
-        app, master=f"local[{cores}]", shuffle_partitions=64, extra_conf=extra,
-        profile="streaming",
-    )
-
-
-def _feed_spec(n_events: int):
-    from openmrs_module_epts_etl_spark.cdc import FeedSpec
-
-    return FeedSpec(
-        n_events=n_events,
-        n_convs=max(n_events // 1000, 100),
-        max_turns=200,
-        out_of_order_window=50_000,
-        hot_key_fraction=0.3,
-        n_hot_convs=3,
-        schema_evolution_lsn=n_events // 2,
-        text_pad_chars=160,
-    )
-
-
-def _batch_size(n_events: int, epochs: int) -> int:
-    """Epoch size that yields EXACTLY ``epochs`` epochs over the generated
-    feed. delivery_seq = lsn + uniform(0, out_of_order_window), so the feed's
-    max delivery_seq overhangs n_events by up to the window; naive
-    n_events//epochs leaves that overhang as a phantom extra epoch of ~window
-    rows paying a full epoch's fixed cost (plan/AQE/commit) — measured as a
-    pure serial addition to every replay at every core count."""
-    spec = _feed_spec(n_events)
-    return max((n_events + spec.out_of_order_window + epochs - 1) // epochs, 10_000)
-
-
-def _replay(
-    spark, n_events: int, batch_size: int, work: str, tag: str, mode: str = "cow",
-    feed_path: str | None = None,
-) -> float:
-    """Replay the feed through the pipeline, return timed replay wall seconds
-    (feed generation/materialization excluded). In MoR mode periodic
-    compaction runs INSIDE the timed region (every 4 epochs + a final one),
-    so the number is sustained-operation throughput, not append-only burst.
-
-    ``feed_path``: pre-generated parquet feed (range-clustered by
-    delivery_seq, so each epoch's pushed-down range scan prunes to its own
-    row groups). Used by the scaling pairs — generating 16M events on 2
-    pinned cores costs more wall than the replay itself, and that dead time
-    is exactly where the shared host's drift invalidates pairs; reading the
-    binlog from files is also the faithful deployment shape. Without it the
-    feed is generated in-process and persisted (the full-machine headline
-    path, where generation is cheap)."""
-    from openmrs_module_epts_etl_spark.cdc import (
-        CdcPipeline,
-        PipelineConfig,
-        compact_latest,
-        generate_feed,
-        transcript_schema,
-    )
-    from openmrs_module_epts_etl_spark.lake import LakeTable, days, mbucket
-
-    if feed_path is not None:
-        feed = spark.read.parquet(feed_path)
-    else:
-        feed = generate_feed(spark, _feed_spec(n_events), num_partitions=64).persist()
-        feed.count()
-    wd = os.path.join(work, tag)
-    tpath = os.path.join(wd, "transcripts")
-    LakeTable.create(spark, tpath, transcript_schema(), [days("ts"), mbucket(16, "conv_id")])
-    pipe = CdcPipeline(
-        spark,
-        PipelineConfig(
-            table_path=tpath,
-            checkpoint_dir=os.path.join(wd, "ck"),
-            batch_size=batch_size,
-            mode=mode,
-            compact_every=4,
-        ),
-    )
-    t0 = time.perf_counter()
-    pipe.run(feed)
-    if mode == "mor":
-        # end-of-replay compaction: final state is materialized one-row-per-key
-        from openmrs_module_epts_etl_spark.lake import LakeTable as _LT
-
-        compact_latest(_LT(spark, tpath), fence_key="bench-final-compact", epoch_id=0)
-    wall = time.perf_counter() - t0
-    if feed_path is None:
-        feed.unpersist()
-    shutil.rmtree(wd, ignore_errors=True)
-    return wall
-
-
-def pregenerate_feed(n_events: int, out_dir: str) -> None:
-    """Generate the scaling feed ONCE on the full (unpinned) machine and
-    write it range-clustered by delivery_seq — each pair child then reads it
-    instead of paying multi-minute 2-core generation, and each epoch's
-    delivery_seq range filter prunes straight to its own row groups."""
-    from openmrs_module_epts_etl_spark.cdc import generate_feed
-
-    spark = _mk_spark(TOTAL_CPUS, "bench-feedgen")
-    try:
-        (
-            generate_feed(spark, _feed_spec(n_events), num_partitions=64)
-            .repartitionByRange(64, "delivery_seq")
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-    finally:
-        spark.stop()
-
-
-def cdc_child(
-    cores: int, n_events: int, epochs: int, work: str, mode: str = "cow",
-    feed_path: str | None = None,
-) -> None:
-    """Subprocess entry: pin to `cores` cpus, warm up, run the timed replay.
-
-    Shuffle partitions scale with the level's cores (4×, the 2-3×-total-cores
-    rule a real cluster follows): a fixed count across levels makes the small
-    level schedule the same number of tasks per stage as the big one, and
-    that per-stage scheduling overhead behaves as fixed cost — an artifact of
-    mis-sizing, not of the engine."""
-    os.sched_setaffinity(0, set(range(cores)))
-    sys.path.insert(0, REPO)
-    spark = _mk_spark_scaled(
-        cores, f"cdc-bench-{cores}", os.path.join(work, f"local-{cores}"), ui=True
-    )
-    try:
-        _replay(spark, 200_000, _batch_size(200_000, 2), work, f"warmup-{cores}", mode=mode)
-        before = _ui_stage_ids(spark) or set()
-        wall = _replay(
-            spark, n_events, _batch_size(n_events, epochs), work, f"timed-{cores}",
-            mode=mode, feed_path=feed_path,
-        )
-        out = {
-            "cores": cores,
-            "events": n_events,
-            "epochs": epochs,
-            "mode": mode,
-            "wall_sec": round(wall, 2),
-            "events_per_sec": round(n_events / wall, 1),
-        }
-        # stage-level CPU bill of the timed region (see _ui_metrics): a
-        # capture failure degrades to a wall-only result, never a dead level
-        met = _ui_metrics(spark, before, cores)
-        if met:
-            out.update(met)
-        print(json.dumps(out))
-    finally:
-        spark.stop()
-
-
-def stream_child(cores: int, n_events: int, work: str) -> None:
-    """Subprocess entry: measure the Structured Streaming topology
-    (readStream file source → foreachBatch MoR append + periodic compaction),
-    the north-star deployment shape. Feed materialized as 16 parquet files →
-    4 micro-batches at maxFilesPerTrigger=4; warmup stream first."""
-    import time as _t
-
-    from openmrs_module_epts_etl_spark.cdc import generate_feed, transcript_schema
-    from openmrs_module_epts_etl_spark.lake import LakeTable, days, mbucket
-    from openmrs_module_epts_etl_spark.streaming import StreamingCdcRunner
-
-    sys.path.insert(0, REPO)
-    spark = _mk_spark_stream(cores, f"stream-bench-{cores}", local_dir=os.path.join(work, "local"))
-    try:
-        def run(n, files, tag):
-            fd = os.path.join(work, f"feed-{tag}")
-            generate_feed(spark, _feed_spec(n), 64).drop("delivery_seq").repartition(
-                files
-            ).write.parquet(fd)
-            tp = os.path.join(work, f"t-{tag}")
-            LakeTable.create(spark, tp, transcript_schema(), [days("ts"), mbucket(16, "conv_id")])
-            r = StreamingCdcRunner(
-                spark, fd, spark.read.parquet(fd).schema, tp,
-                os.path.join(work, f"ck-{tag}"), max_files_per_trigger=4,
-                mode="mor", compact_every=4,
-            )
-            t0 = _t.perf_counter()
-            res = r.run_available_now()
-            return _t.perf_counter() - t0, len(res)
-
-        run(200_000, 4, "warm")
-        wall, batches = run(n_events, 16, "timed")
-        print(json.dumps({
-            "cores": cores, "events": n_events, "micro_batches": batches,
-            "mode": "stream-mor", "wall_sec": round(wall, 2),
-            "events_per_sec": round(n_events / wall, 1),
-        }))
-    finally:
-        spark.stop()
-
-
-# Probe design notes (why these are shaped this way): the 2026-08-19 runs
-# produced 9/9 pairs whose VALIDITY gates tripped on probe noise, not host
-# state — the old probes spawned a fresh mp.Pool per sample, re-allocated a
-# 64 MB array per task (page-fault-dominated, so the "bandwidth" number
-# measured the kernel's reclaim state, observed 2× swings minutes apart on a
-# quiet host), and timed a single ~1 s region. Fixes, each attacking one
-# noise source: (a) 2 s settle so an adjacent Spark JVM teardown's page
-# reclaim doesn't bleed into the timed region; (b) ONE persistent pool with
-# workers pinned in the initializer — no per-sample fork/exec cost inside the
-# timing; (c) the bw buffer is allocated ONCE per worker and re-swept, so the
-# timed region is pure DRAM streaming, not allocation; (d) a full warmup
-# round; (e) median of 3 timed repeats, each a multi-second region.
-_CAL = """
-import os, sys, time, multiprocessing as mp
-cores = int(sys.argv[1])
-def _init():
-    os.sched_setaffinity(0, set(range(cores)))
-def burn(_):
-    x = 0
-    for i in range(20_000_000):
-        x += i
-    return x
-if __name__ == "__main__":
-    time.sleep(2.0)
-    tasks = cores * 3
-    with mp.Pool(cores, initializer=_init) as pool:
-        pool.map(burn, range(cores * 2))  # warmup
-        rates = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            pool.map(burn, range(tasks))
-            rates.append(tasks / (time.perf_counter() - t0))
-    print(round(sorted(rates)[1], 3))
-"""
-
-
-_CAL_BW = """
-import os, sys, time, multiprocessing as mp
-import numpy as np
-cores = int(sys.argv[1])
-_buf = None
-def _init():
-    global _buf
-    os.sched_setaffinity(0, set(range(cores)))
-    # 256 MB per worker: bigger than the whole 260 MB shared L3, so the sweep
-    # streams from DRAM at EVERY core count — a 64 MB buffer is L3-resident
-    # at 2 workers but not at 8, which would fake a scaling cliff
-    _buf = np.arange(32_000_000, dtype=np.float64)
-    _buf.sum()  # paged in here, outside any timed region
-def burn(_):
-    s = 0.0
-    for _ in range(15):  # 3.84 GB swept per task: a multi-second timed region
-        s += float(_buf.sum())
-    return s
-if __name__ == "__main__":
-    time.sleep(2.0)
-    tasks = cores * 3
-    with mp.Pool(cores, initializer=_init) as pool:
-        pool.map(burn, range(cores))  # warmup
-        rates = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            pool.map(burn, range(tasks))
-            rates.append(tasks / (time.perf_counter() - t0))
-    print(round(sorted(rates)[1], 3))
-"""
-
-
-def _run_cal(script: str, cores: int) -> float:
-    with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as fh:
-        fh.write(script)
-        p = fh.name
-    try:
-        out = _run_tracked([sys.executable, p, str(cores)], timeout=240)
-        return float(out.stdout.strip().splitlines()[-1])
-    finally:
-        os.unlink(p)
-
-
-def calibrate(cores: int) -> float:
-    """Perfectly-parallel pinned busy-work throughput (tasks/sec) at this
-    core count — the sandbox's own scaling ceiling, measured under the same
-    host conditions as the adjacent engine run. Cache-resident, so it is the
-    CONSERVATIVE ceiling: it stays near-linear even when co-tenants are
-    saturating DRAM bandwidth (which is what actually throttles shuffle)."""
-    return _run_cal(_CAL, cores)
-
-
-def calibrate_bw(cores: int) -> float:
-    """Memory-bandwidth-bound variant (streaming 64 MB numpy sums): a second
-    ceiling reported per pair. Shuffle-heavy engine work sits between the two
-    bounds; normalization deliberately keeps using the cache-resident one so
-    reported efficiency is never inflated by a bandwidth-squeezed host."""
-    return _run_cal(_CAL_BW, cores)
-
-
-def run_level(
-    cores: int, n_events: int, epochs: int, reps: int = 1, mode: str = "cow",
-    feed_path: str | None = None, timeout_s: float = 3600,
-) -> dict | None:
-    """Best-of-reps replay at one pinned core count. Returns None when every
-    rep fails (child crash/OOM) or overruns ``timeout_s`` — callers treat a
-    None level as a failed measurement and degrade, instead of the whole
-    bench dying with no JSON line (the r2 failure mode)."""
-    best: dict | None = None
-    for _ in range(max(reps, 1)):
-        work = tempfile.mkdtemp(prefix=f"cdc-bench-{cores}-", dir="/dev/shm")
-        try:
-            argv = [sys.executable, os.path.join(REPO, "bench.py"), "--cdc-child",
-                    str(cores), str(n_events), str(epochs), work, mode]
-            if feed_path is not None:
-                argv.append(feed_path)
-            try:
-                out = _run_tracked(argv, timeout=timeout_s)
-            except subprocess.TimeoutExpired:
-                _log(f"level cores={cores} timed out after {timeout_s:.0f}s")
-                continue
-            lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
-            if not lines:
-                _log(f"level cores={cores} produced no result (rc={out.returncode}): "
-                     f"{out.stderr[-500:]}")
-                continue
-            res = json.loads(lines[-1])
-            if best is None or res["events_per_sec"] > best["events_per_sec"]:
-                best = res
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-    return best
+    return get_spark(app, master=f"local[{cores}]", shuffle_partitions=64)
 
 
 HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "latest_event_per_user",
-    "user_sessions",
-    "doc_quality",
-    "exact_dup_groups",
-    "minhash_signatures_16",
-    "simhash_near_dups",
-    "ann_cosine_topk",
-    "label_centroids",
-    "token_stats",
-    "doc_fingerprints",
-    "embedding_near_dup_pairs",
-    "reconciliation_report",
-    # round-2 operators: transcript payload, corpus hygiene, SCD2, composed
-    # near-dup — measured so the per-round artifact tracks their cost too
-    "conv_reassembly",
-    "conv_stats",
-    "dup_assistant_turns",
-    "decontamination",
-    "pii_redaction",
-    "doc_repetition",
-    "near_dup_jaccard_pairs",
-    "near_dup_components",
-    "user_state_scd2",
-    "ann_ivf_topk",
-    # round-3: native session windows (streaming-capable twin of user_sessions)
-    "session_window_agg",
-    # round-3/4/5: the CDC driver queries. cdc_replayed_state runs FIRST so
-    # the session-cached two-epoch replay + table build in plans/cdc_queries
-    # (_replayed) is paid under ITS untimed pass — its own timed number is the
-    # state read-back, and cdc_snapshot_diff's number is the diff plan alone.
-    # (Attribution-history correction, per the verified git record: the warm
-    # pass has absorbed each query's one-time fixture build since the FIRST
-    # bench that ran these queries, so r3's 9.33 s diff number was already
-    # plan-only — the r3 verdict's "85% fixture" diagnosis was wrong, and
-    # this ordering, while correct for cdc_replayed_state's own row, never
-    # changed the diff number. The r5 fix is in the plan itself: the two
-    # pruned per-version state reads are fused into one flagged scan,
-    # cdc/changelog.py.)
-    "cdc_replayed_state",
-    "cdc_snapshot_diff",
-    # round-5: chained propagation (changes_as_feed → TableFollower → merge);
-    # its one-time fixture (bootstrap + poll) is likewise paid under the
-    # untimed warm pass, the timed number is the dst state read-back
-    "cdc_changes_replayed",
+    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
+    "q6_forecast_revenue", "latest_event_per_user", "user_sessions", "doc_quality",
+    "exact_dup_groups", "minhash_signatures_16", "simhash_near_dups", "ann_cosine_topk",
+    "label_centroids", "token_stats", "doc_fingerprints", "embedding_near_dup_pairs",
+    "reconciliation_report", "conv_reassembly", "conv_stats", "dup_assistant_turns",
+    "decontamination", "pii_redaction", "doc_repetition", "near_dup_jaccard_pairs",
+    "near_dup_components", "user_state_scd2", "ann_ivf_topk", "session_window_agg",
+    # first of the CDC queries: the session-cached replay + table build in
+    # plans/cdc_queries is paid under its untimed pass, not the diff's
+    "cdc_replayed_state", "cdc_snapshot_diff", "cdc_changes_replayed",
 ]
 
 
@@ -921,977 +166,133 @@ def bench_queries(
 
 
 def main() -> None:
-    sys.path.insert(0, REPO)
-    signal.signal(signal.SIGTERM, _on_term)
-    signal.signal(signal.SIGINT, _on_term)
-    # Wall-clock budget (seconds). The driver runs bench.py under a hard
-    # timeout it does not publish; round 2 overran it (rc=124 → no parsed
-    # result at all). Default sized against the only hard evidence about the driver's unpublished
-    # timeout: round 1's ~30-min protocol survived, round 2's ~90-min one did not.
-    # 1500s keeps a from-cold run strictly inside the proven-safe window; the
-    # SIGTERM handler still flushes a partial JSON line if the driver kills us.
-    budget = Budget(float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1500")))
-    # the alarm is the backstop for everything the section planner cannot
-    # see (in-process Spark jobs, a stalled calibration); 25s of margin pays
-    # for the emit + interpreter teardown
-    signal.signal(signal.SIGALRM, _on_alarm)
-    signal.alarm(max(int(budget.total) - 25, 30))
-    fingerprint = _code_fingerprint()
-    protocol = _protocol_fingerprint()
+    for sig in (signal.SIGTERM, signal.SIGINT, signal.SIGALRM):
+        signal.signal(sig, _on_signal)
+    total = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1500"))
+    signal.alarm(max(int(total) - 25, 1))
+    deadline = time.monotonic() + total
+
+    def remaining() -> float:
+        return deadline - time.monotonic()
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(TOTAL_CPUS)))
-    # 32M events in 2 epochs per scaling level. Measured on a quiet host
-    # (2026-08-19, three host-stationary pairs): the parallel part of the
-    # replay scales essentially perfectly — T(c) = C/c + k·F fits pair walls
-    # with C≈253 core-sec and F≈4.1s of per-EPOCH fixed driver cost
-    # (plan/AQE rounds, commit, footer discovery), putting the 16M/4-epoch
-    # raw-efficiency CEILING at (C/2+4F)/(C/2+16F) = 0.743 — exactly the
-    # best measured pair, i.e. the protocol, not the engine, capped the
-    # number. 32M/2 epochs lifts the model ceiling to ~0.91 and is the more
-    # faithful picture of 10^10-event-scale operation, where one epoch is
-    # minutes of data and F is noise. Head/soak keep their own shapes.
-    n_events = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "32000000"))
-    epochs = int(os.environ.get("SPARK_GRAFT_BENCH_EPOCHS", "4"))
-    scale_epochs = int(os.environ.get("SPARK_GRAFT_SCALE_EPOCHS", "2"))
-    n_lo = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-
-    # scaling pair: N and 4N pinned cores, MoR ingest mode (the path built for
-    # ingest throughput: delta appends + in-region periodic compaction; CoW's
-    # per-epoch full-partition rewrite is read-optimized and write-amplified,
-    # see BENCH.md). The host is shared and its behavior DRIFTS between
-    # phases (observed: a co-tenant lull during one 2-core level made it 25%
-    # faster than every other measurement of the same code; another round ran
-    # while co-tenants saturated DRAM so hard that a perfectly-parallel
-    # bandwidth-bound numpy job "scaled" at 0.37 — and the engine's raw 0.41
-    # EXCEEDED that hardware bound). So each pair interleaves its own
-    # calibrations (immediately before each level, and again after the pair
-    # at the lo core count for a drift check) and is admitted to the median
-    # only if the HOST passed stationarity checks — the gates below look
-    # exclusively at calibration (host) signals, never at the engine's own
-    # result, so the selection cannot flatter the engine; a pair measured
-    # while the hardware itself refuses to scale measures the co-tenant, not
-    # the engine. Every pair, valid or not, is emitted in the JSON.
-    min_cache_ceil = float(os.environ.get("SPARK_GRAFT_MIN_CEIL", "0.7"))
-    # 0.8, raised from 0.55: pairs measured while co-tenants squeezed DRAM to
-    # 0.55-0.8× linear used to pass this gate and then under-scale — the
-    # engine is bandwidth-bound, the busy-loop ceiling used for normalization
-    # deliberately is not, so such pairs entered the median at a penalty that
-    # measured the co-tenant. A window where even a perfectly-parallel numpy
-    # stream cannot scale ≥0.8 cannot evidence the engine's scaling either
-    # way; reject it (stored pairs are re-judged under this gate at load).
-    min_bw_ceil = float(os.environ.get("SPARK_GRAFT_MIN_BW_CEIL", "0.8"))
-    max_tries = int(os.environ.get("SPARK_GRAFT_BENCH_PAIR_TRIES", str(reps + 2)))
-    # pre-gate skips are ~2 calibration-minutes, not ~8 engine-minutes, so
-    # they get a separate, larger allowance plus a settle sleep — the point
-    # is to keep probing for a quiet window without burning pair budget
-    max_skips = int(os.environ.get("SPARK_GRAFT_BENCH_PAIR_SKIPS", "24"))
-    skip_sleep = float(os.environ.get("SPARK_GRAFT_PAIR_RETRY_SLEEP_S", "45"))
-    # Prior artifact: sections are reused ONLY when the code fingerprint
-    # matches (or SPARK_GRAFT_REUSE_SECTIONS=1 forces it), and every reused
-    # section is stamped with the fingerprint it was measured under — one
-    # artifact never silently mixes measurements of different code versions
-    # without saying so.
-    prior = None
-    try:
-        with open(os.path.join(REPO, "BENCH.json")) as fh:
-            prior = json.load(fh)
-    except (OSError, ValueError):
-        prior = None
-    prior_fp = (prior or {}).get("code_fingerprint")
-    prior_proto = (prior or {}).get("bench_protocol")
-    fp_match = (
-        prior is not None
-        and prior_fp == fingerprint
-        and prior_proto == protocol
-        and fingerprint != "unknown"
-        and not fingerprint.endswith("-dirty")
-    )
-    force_reuse = os.environ.get("SPARK_GRAFT_REUSE_SECTIONS") == "1"
-    can_reuse = prior is not None and (fp_match or force_reuse)
-    _PARTIAL["fingerprint"] = fingerprint
-    _PARTIAL["protocol"] = protocol
-    _PARTIAL["prior"] = json.loads(json.dumps(prior)) if prior is not None else None
-    _log(
-        f"fingerprint={fingerprint} protocol={protocol} prior={prior_fp}/{prior_proto} "
-        f"reuse={'exact' if fp_match else 'forced' if can_reuse else 'no'}"
-    )
-
-    def reuse_section(name: str):
-        sec = prior.get(name)
-        if isinstance(sec, dict):
-            sec = {**sec, "reused_from": prior_fp, "reused_exact_match": fp_match}
-        return sec
-
-    # Reuse is gated on COMPLETENESS and provenance, not mere presence: a
-    # budget-truncated run writes a partial queries dict, and a too-tight
-    # budget substitutes the scaling pair's hi level (tagged "source") for
-    # the headline — republishing either verbatim would freeze a degraded
-    # artifact forever. Only full-machine, un-truncated sections qualify.
-    def _queries_full(q) -> bool:
-        # the sf must match too: a small-sf smoke artifact left on disk would
-        # otherwise republish its (much faster) query times into a full-sf run
-        sf_now = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-        prior_sf = str((prior or {}).get("sf"))
-        return (
-            isinstance(q, dict)
-            and all(k in q for k in HEADLINE)
-            and prior_sf == (sf_now if not sf_now.replace(".", "").isdigit()
-                             else str(float(sf_now)))
-        )
-
-    def _level_full(sec, events) -> bool:
-        # events must match too: a tiny smoke-run artifact left on disk would
-        # otherwise pass the cores check and freeze its numbers into every
-        # subsequent same-fingerprint run
-        return (
-            isinstance(sec, dict)
-            and sec.get("cores") == cpus
-            and sec.get("events") == events
-            and "source" not in sec
-        )
-
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    _COMPACT.update(
-        {
-            "metric": "cdc_events_per_sec_local%d" % cpus,
-            "value": None,
-            "unit": "events/sec",
-            "queries": {},
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "code_fingerprint": fingerprint,
-            "bench_protocol": protocol,
-            "bench_budget_s": budget.total,
-        }
-    )
+    sections, skipped = {}, {}
+    _COMPACT.update({
+        "metric": f"cdc_events_per_sec_local{cpus}", "value": None, "unit": "events/sec",
+        "queries": {}, "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "bench_budget_s": total, "skipped": skipped,
+    })
 
-    head_events = int(os.environ.get("SPARK_GRAFT_HEAD_EVENTS", "16000000"))
-    # median of N reps, same honesty rule as soak/scaling — a single sample
-    # on this shared host swung 3.7× between rounds (co-tenant bursts)
-    head_reps = int(os.environ.get("SPARK_GRAFT_HEAD_REPS", "3"))
-    stream_events = int(os.environ.get("SPARK_GRAFT_STREAM_EVENTS", str(4_000_000)))
-    soak_events = int(os.environ.get("SPARK_GRAFT_SOAK_EVENTS", str(48_000_000)))
-
-    # planning costs (seconds), deliberately pessimistic; the first measured
-    # pair replaces the pair estimate
-    est_head_rep = head_events / 140_000 + 80
-    est_queries = 0 if (can_reuse and _queries_full(prior.get("queries"))) else 450
-    est_head = 0 if (can_reuse and _level_full(prior.get("head"), head_events)) else est_head_rep
-
-    def reserve() -> float:
-        # the mandatory post-scaling sections (queries = driver contract,
-        # head = the artifact's headline value) plus teardown margin
-        return est_queries + est_head + 60
-
-    # ---- scaling pairs (the north rule) -----------------------------------
-    # same-fingerprint pairs from the committed artifact join the pool,
-    # tagged from_prior_run — they measured byte-identical code, and a tight
-    # driver budget may only fit 1-2 fresh pairs. Protocol must match too:
-    # a pair is only comparable at the same (events, epochs, cores) shape —
-    # mixing 16M/4-epoch pairs into a 32M/2-epoch median would average two
-    # different fixed-cost ceilings.
-    def _same_protocol(p: dict, ev: int) -> bool:
-        lo = p.get("lo") or {}
-        return (
-            lo.get("events") == ev
-            and lo.get("epochs") == scale_epochs
-            and lo.get("cores") == n_lo
-        )
-
-    # Valid pairs are retained preferentially: the 12-slot pool otherwise
-    # ages out old VALID pairs under a burst of fresh invalid ones from a
-    # disturbed retry — and the median only ever draws from valid pairs, so
-    # this preserves the sample rather than selecting results.
-    def _prior_pool(ev: int) -> list[dict]:
-        if not (fp_match and (prior.get("scaling") or {}).get("all_pairs")):
-            return []
-        matched = [p for p in prior["scaling"]["all_pairs"] if _same_protocol(p, ev)]
-        # observe every stored pair's calibrations FIRST, so the relative
-        # floors each pair is then judged against reflect the whole record
-        for p in matched:
-            _observe_pair_cal(p, n_lo)
-        prior_all = [_regate(p, n_lo, min_cache_ceil, min_bw_ceil) for p in matched]
-        ranked_pool = [p for p in prior_all if p.get("valid")] + [
-            p for p in prior_all if not p.get("valid")
-        ]
-        return [{**p, "from_prior_run": True} for p in ranked_pool[:12]]
-
-    def _pair_est(ev: int) -> float:  # one pair + the one-off feed generation
-        return ev / 85_000 + ev / 280_000 + 160 + ev / 150_000 + 50
-
-    # Degrade-to-fit: at the default driver budget (1500s) a from-cold run
-    # (new code fingerprint → nothing reusable, reserve ≈ 700s) can NEVER fit
-    # a 32M-event pair (~900s) — it would publish scaling=None, silently
-    # failing the north rule's one measurable criterion. Halve the scaling
-    # event count until a pair fits (protocol-matched prior pairs, when they
-    # exist at some size, take precedence — pools must never mix protocols).
-    # A 2-epoch pair at reduced events raises the relative weight of fixed
-    # per-epoch driver cost (lower raw ceiling — see the 32M rationale
-    # above), so this is strictly a budget fallback: the artifact records the
-    # measured event count and the full-protocol number wins whenever the
-    # budget allows it.
-    scale_events = n_events
-    prior_pairs = _prior_pool(scale_events)
-    while (
-        not prior_pairs
-        and scale_events > 4_000_000
-        and budget.remaining() - reserve() < _pair_est(scale_events)
-    ):
-        scale_events //= 2
-        prior_pairs = _prior_pool(scale_events)
-        _log(f"scaling: degrading pair protocol to {scale_events} events (budget)")
-
-    pairs: list[dict] = _PARTIAL["fresh_pairs"]  # shared so a signal flush sees them
-    feed_dir = None
-    est_feedgen = scale_events / 150_000 + 50
-    pair_cost = scale_events / 85_000 + scale_events / 280_000 + 160
-    tries = 0
-    skips = 0
-    while tries < max(max_tries, reps, 1) and skips < max_skips:
-        # the gather target counts CLEAN pairs (valid AND not measured under
-        # hi-side steal): disturbed pairs are kept as conservative evidence
-        # but each understates the engine, so a pool that is mostly disturbed
-        # medians below what the engine measures on a quiet host — the
-        # round-3 failure mode (median 0.739 with 3/6 disturbed while quiet
-        # windows measured raw 0.84-0.98). Bounded by max_tries / max_skips /
-        # budget as before.
-        n_clean = sum(
-            1 for p in pairs + prior_pairs
-            if p.get("valid") and not p.get("hi_side_disturbed")
-        )
-        if pairs and n_clean >= max(reps, 1):
-            break
-        need = pair_cost + (est_feedgen if feed_dir is None else 0)
-        if budget.remaining() - reserve() < need:
-            _log(
-                f"scaling: stop after {len(pairs)} fresh pairs "
-                f"(next needs ~{need:.0f}s, have {budget.remaining() - reserve():.0f}s)"
-            )
-            break
-        t_pair = time.monotonic()
-        # de-bias against one-sided host phase: alternate which level runs
-        # first across pairs (round-4 finding: the probe-blind disturbance
-        # sits on whichever window the 8-core level happens to occupy; with
-        # lo-hi on even tries and hi-lo on odd, a host phase that spans one
-        # pair's second slot deflates half the pairs and inflates the other
-        # half instead of deflating them all, so the pool median de-biases)
-        order = "lo-hi" if tries % 2 == 0 else "hi-lo"
+    def queries() -> None:
+        # the queries may use what the later sections' worst cases leave over
+        reserve, t = sum(s[-1] + 2 * MARGIN_S for s in SECTIONS[1:]), time.monotonic()
         try:
-            # PRE-GATE: all four before-level calibrations run first (~2 min)
-            # and a window that already fails the ceiling gates is skipped
-            # before the ~8-minute engine levels are paid — the drift gates
-            # still re-check the lo calibrations after the pair as before.
-            # Exception: when there is no pair at all yet (fresh or prior)
-            # and the skip allowance is nearly spent, run the engine anyway —
-            # an artifact with one host-disturbed pair beats one with none.
-            c_lo = calibrate(n_lo)
-            cb_lo = calibrate_bw(n_lo)
-            c_hi = calibrate(n_lo * 4)
-            cb_hi = calibrate_bw(n_lo * 4)
-            _observe_cal(c_lo=c_lo, c_hi=c_hi, cb_lo=cb_lo, cb_hi=cb_hi)
-            # pre-gate still skips on EITHER class: a deflating window wastes
-            # engine minutes on a number we already know is understated —
-            # better to wait for a clean window when budget allows
-            pre_fatal, pre_defl, pre_ceil, pre_bw = _gate_check(
-                c_lo, c_hi, c_lo, cb_lo, cb_hi, cb_lo, min_cache_ceil, min_bw_ceil
-            )
-            pre_bad = pre_fatal + pre_defl
-            must_run = not pairs and not prior_pairs and skips >= max_skips - 2
-            if pre_bad and not must_run:
-                skips += 1
-                _log(
-                    f"window skipped pre-engine ({skips}/{max_skips}): "
-                    f"cache_ceil={pre_ceil:.3f} bw_ceil={pre_bw:.3f} — {'; '.join(pre_bad)}"
-                )
-                if budget.remaining() - reserve() > need + skip_sleep:
-                    time.sleep(skip_sleep)
-                continue
-            if feed_dir is None:
-                # pre-generate the pair feed once on the full machine:
-                # pinned-level generation is dead wall-clock inside the
-                # pair's stationarity window (on 2 cores it exceeds the
-                # replay itself), and a file-backed binlog is the faithful
-                # deployment shape anyway. Deferred past the pre-gate so a
-                # busy host never pays it.
-                feed_dir = tempfile.mkdtemp(prefix="bench-feed-", dir="/dev/shm")
-                _log(f"pre-generating {scale_events}-event feed")
-                pregenerate_feed(scale_events, feed_dir)
-            # a hung level must not outlive the driver's own timeout: cap
-            # each level at what is left after the reserved sections, so a
-            # bad run degrades to a skipped pair instead of rc=124 (no JSON)
-            def _level(cores: int) -> dict | None:
-                return run_level(
-                    cores, scale_events, scale_epochs, reps=1, mode="mor",
-                    feed_path=feed_dir,
-                    timeout_s=max(180.0, budget.remaining() - reserve() - 30),
-                )
+            _COMPACT["queries"] = bench_queries(sf_dir, cpus, time_left=lambda: remaining() - reserve)
+        except Exception as e:  # noqa: BLE001 - a missing data set must not cost the CDC numbers
+            traceback.print_exc(file=sys.stderr)
+            skipped["queries"] = f"{type(e).__name__}: {e}"
+        _log(f"queries: {len(_COMPACT['queries'])} timed in {time.monotonic() - t:.0f} s")
+        if "queries" not in skipped and len(_COMPACT["queries"]) < len(HEADLINE):
+            skipped["queries"] = f"budget: {len(_COMPACT['queries'])}/{len(HEADLINE)} timed"
 
-            if order == "lo-hi":
-                p_lo = _level(n_lo)
-                p_hi = _level(n_lo * 4)
-            else:
-                p_hi = _level(n_lo * 4)
-                p_lo = _level(n_lo)
-            c_lo2 = calibrate(n_lo)
-            cb_lo2 = calibrate_bw(n_lo)
-            _observe_cal(c_lo=c_lo2, cb_lo=cb_lo2)
-        except (subprocess.TimeoutExpired, ValueError, IndexError) as e:
-            # a calibration stall is a host event, same as a failed level:
-            # skip the pair, don't kill the bench
-            tries += 1
-            pair_cost = max(time.monotonic() - t_pair, 60.0)
-            _log(f"pair skipped: calibration failed ({e})")
-            continue
-        if p_lo is None or p_hi is None:
-            tries += 1
-            pair_cost = max(time.monotonic() - t_pair, 60.0)
-            _log("pair skipped: a level failed or timed out")
-            continue
-        raw = p_hi["events_per_sec"] / (4.0 * p_lo["events_per_sec"])
-        # gate inputs: hi calibrations from before the levels, lo calibrations
-        # bracketing them (the geometric lo mean halves calibration noise)
-        fatal, deflating, ceil_u, bw_ceil_u = _gate_check(
-            c_lo, c_hi, c_lo2, cb_lo, cb_hi, cb_lo2, min_cache_ceil, min_bw_ceil
-        )
-        bad = fatal
-        ceil = _effective_ceiling(c_lo, c_hi, c_lo2, deflating)
-        ceil_bw = min(max(bw_ceil_u, 0.25), 1.0)
-        cpu_parity = None
-        if p_lo.get("exec_cpu_sec") and p_hi.get("exec_cpu_sec"):
-            # hi CPU bill / lo CPU bill for identical work: ≈1.0 proves no
-            # contention inflation and no serial component (see _ui_metrics)
-            cpu_parity = round(p_hi["exec_cpu_sec"] / p_lo["exec_cpu_sec"], 3)
-        pairs.append({
-            "lo": p_lo, "hi": p_hi, "raw": round(raw, 3), "ceiling": round(ceil, 3),
-            "bandwidth_ceiling": round(ceil_bw, 3),
-            "normalized": round(min(raw / ceil, 1.0), 3),
-            "order": order,
-            "cpu_parity": cpu_parity,
-            "valid": not bad,
-            "invalid_reasons": bad or None,
-            "hi_side_disturbed": deflating or None,
-            "calibration_tasks_per_sec": {
-                f"{n_lo}_cores": c_lo, f"{n_lo * 4}_cores": c_hi,
-                f"{n_lo}_cores_after": c_lo2,
-            },
-            "bw_calibration_tasks_per_sec": {
-                f"{n_lo}_cores": cb_lo, f"{n_lo * 4}_cores": cb_hi,
-                f"{n_lo}_cores_after": cb_lo2,
-            },
-        })
-        tries += 1
-        pair_cost = max(time.monotonic() - t_pair, 60.0)
-        _log(
-            f"pair {len(pairs)}: raw={raw:.3f} norm={pairs[-1]['normalized']} "
-            f"valid={not bad} ({pair_cost:.0f}s)"
-        )
-    if feed_dir is not None:
-        shutil.rmtree(feed_dir, ignore_errors=True)
-
-    # median over VALID pairs (fresh + same-fingerprint prior); if the host
-    # never went quiet, fall back to all pairs and say so in the artifact.
-    # HEADLINE efficiency = the MEDIAN valid pair, not the best: best-of-N is
-    # a selection rule that flatters one lucky host phase; the median is the
-    # number a reviewer should trust (the best pair is still reported).
-    # Every pair is re-judged here under the FINAL relative floors — the pool
-    # maximum may have risen since a pair was measured (or loaded), and a
-    # pair taken >15% below the fastest observed host state is demoted no
-    # matter when it was admitted.
-    def _median(vals) -> float | None:
-        """True median: the mean of the two central elements on even counts.
-        The earlier upper-middle convention (sorted[n//2]) published the
-        FASTER of two reps as 'the median' — a small optimistic bias in an
-        artifact built around measurement honesty (round-4 advice)."""
-        vs = sorted(vals)
-        n = len(vs)
-        if not n:
-            return None
-        return round(vs[n // 2] if n % 2 else (vs[n // 2 - 1] + vs[n // 2]) / 2, 3)
-
-    all_pairs = [
-        _regate(p, n_lo, min_cache_ceil, min_bw_ceil) for p in pairs + prior_pairs
-    ]
-    scored = [p for p in all_pairs if p["valid"]] or all_pairs
-    host_disturbed = not any(p["valid"] for p in all_pairs)
-    if scored:
-        best = max(scored, key=lambda p: p["normalized"])
-        lo, hi = best["lo"], best["hi"]
-        raw_eff, ceiling = best["raw"], best["ceiling"]
-        cal = best["calibration_tasks_per_sec"]
-        cal_lo, cal_hi = cal[f"{n_lo}_cores"], cal[f"{n_lo * 4}_cores"]
-        efficiency = _median(p["normalized"] for p in scored)
-        best_eff = best["normalized"]
-        raw_median = _median(p["raw"] for p in scored)
-    else:  # budget never fit a single pair and no prior pool
-        best = lo = hi = None
-        raw_eff = ceiling = cal_lo = cal_hi = None
-        efficiency = best_eff = raw_median = None
-    # clean pairs = valid AND not hi-side-disturbed: every disturbed member
-    # is an explicit lower bound (steal during its 8-core window), so the
-    # clean-only median is the pool's best unbiased estimate of the engine
-    # while the full-valid median RETAINS those conservative members (note:
-    # retention, not a floor — a pool whose members are individually lower
-    # bounds does not make its median a bound on anything; round-4 advice).
-    # Both are reported; neither discards evidence.
-    clean = [p for p in all_pairs if p["valid"] and not p.get("hi_side_disturbed")]
-    if clean:
-        clean_eff = _median(p["normalized"] for p in clean)
-        clean_raw = _median(p["raw"] for p in clean)
-    else:
-        clean_eff = clean_raw = None
-
-    # hi/lo level spread over valid pairs: the direct picture of the
-    # probe-blind host phase round 4 documented (8-core engine levels swing
-    # ~2× across green-gated windows while 2-core levels stay tight) — a
-    # reviewer sees the phase in the artifact instead of the git history
-    def _level_spread(side: str) -> dict | None:
-        vals = sorted(p[side]["events_per_sec"] for p in all_pairs if p["valid"])
-        if not vals:
-            return None
-        return {"min": vals[0], "median": _median(vals), "max": vals[-1], "n": len(vals)}
-
-    # profile_pair: the committed, reproducible form of the protocol-exact
-    # back-to-back profile that previously lived only as BASELINE.md prose
-    # (round-4 verdict task #1). The screen is WORK PARITY: cpu_parity is
-    # the hi level's executor-CPU bill over the lo level's for byte-identical
-    # work, so parity ≈ 1 means the 8-core level executed the same cycles the
-    # 2-core level did — no contention inflation (memory-stall cycles bill as
-    # CPU time, so a window where co-tenants pressure the socket shows up as
-    # the hi level "working harder" for the same replay; measured in this
-    # pool's first gather: slow pairs carried hi bills of 379-384 CPU-s vs
-    # 318-342 for the fast ones, parity 1.29 vs 1.08, while cpu_over_run sat
-    # at 0.84-0.88 for EVERY level — the phase is bill inflation, not steal).
-    # Among parity-clean pairs (cpu_parity ≤ PARITY_CLEAN_MAX) the profile
-    # pair is the BEST raw — explicitly a demonstration bound, labeled as
-    # such, never the headline (the pool median above is); a parity-clean
-    # MEDIAN is also emitted as the principled middle ground.
-    parity_clean_max = float(os.environ.get("SPARK_GRAFT_PARITY_CLEAN_MAX", "1.1"))
-    _prof_keys = ("cores", "events_per_sec", "wall_sec", "exec_cpu_sec",
-                  "exec_run_sec", "stage_util", "cpu_over_run")
-    prof_cands = [
-        p for p in all_pairs
-        if p["valid"] and isinstance(p.get("cpu_parity"), (int, float))
-    ]
-    parity_clean = [p for p in prof_cands if p["cpu_parity"] <= parity_clean_max]
-    parity_clean_median = _median(p["raw"] for p in parity_clean) if parity_clean else None
-    profile_pair = None
-    if prof_cands:
-        if parity_clean:
-            pp = max(parity_clean, key=lambda p: p["raw"])
-            sel = (f"best raw among work-parity pairs (cpu_parity ≤ "
-                   f"{parity_clean_max}) — a labeled demonstration bound, "
-                   "not the headline; see BENCH.md")
-        else:  # no parity-clean pair: fall back to the least-inflated one
-            pp = min(prof_cands, key=lambda p: p["cpu_parity"])
-            sel = "min cpu_parity (no pair met the work-parity screen)"
-        profile_pair = {
-            "raw": pp["raw"],
-            "normalized": pp["normalized"],
-            "cpu_parity": pp.get("cpu_parity"),
-            "order": pp.get("order"),
-            "selection": sel,
-            "parity_clean_pairs": len(parity_clean),
-            "parity_clean_raw_median": parity_clean_median,
-            "lo": {k: pp["lo"].get(k) for k in _prof_keys},
-            "hi": {k: pp["hi"].get(k) for k in _prof_keys},
-        }
-    _COMPACT.update(
-        {
-            "scaling_efficiency_N_to_4N": efficiency,
-            "scaling_raw_median": raw_median,
-            "scaling_efficiency_clean_median": clean_eff,
-            "scaling_raw_clean_median": clean_raw,
-            "scaling_clean_pairs": len(clean),
-            "scaling_valid_pairs": sum(1 for p in all_pairs if p["valid"]),
-            "scaling_fresh_pairs": len(pairs),
-            "scaling_host_disturbed": host_disturbed,
-            "scaling_profile_pair_raw": profile_pair["raw"] if profile_pair else None,
-            "scaling_profile_pair_cpu_parity": (
-                profile_pair["cpu_parity"] if profile_pair else None
-            ),
-            "scaling_parity_clean_raw_median": parity_clean_median,
-            "scaling_parity_clean_pairs": len(parity_clean),
-        }
-    )
-
-    # ---- queries (driver contract) -----------------------------------------
-    queries_reused = None
-    if can_reuse and _queries_full(prior.get("queries")):
-        queries = dict(prior["queries"])
-        queries_reused = prior_fp
-    else:
-        timed = 2 if budget.remaining() - est_head > 600 else 1
-        queries = bench_queries(
-            sf_dir, cpus, timed_passes=timed,
-            time_left=lambda: budget.remaining() - est_head - 45,
-        )
-    _COMPACT["queries"] = queries
-    if queries_reused:
-        _COMPACT["queries_reused_from"] = queries_reused
-
-    # ---- headline absolute throughput on the full machine, both modes ------
-    def _median_level(cores, n_ev, eps, mode, reps_n):
-        runs = sorted(
-            (r for r in (run_level(cores, n_ev, eps, mode=mode) for _ in range(reps_n)) if r),
-            key=lambda s: s["events_per_sec"],
-        )
-        if not runs:
-            return None
-        # dict-valued median: LOWER middle on even counts — a dict cannot
-        # average, and the earlier upper-middle published the faster of two
-        # reps as "the median"; the conservative central rep is the honest
-        # pick (convention stated in BENCH.md). Scalar medians average.
-        med = runs[(len(runs) - 1) // 2]
-        med["all_reps_events_per_sec"] = [s["events_per_sec"] for s in runs]
-        return med
-
-    if can_reuse and _level_full(prior.get("head"), head_events):
-        head = reuse_section("head")
-    else:
-        fit = int(max((budget.remaining() - 90) // est_head_rep, 0))
-        n = min(head_reps, fit)
-        head = _median_level(cpus, head_events, epochs, "mor", n) if n else None
-    if head is None and hi is not None:
-        # budget too tight for a dedicated headline run: the scaling pair's
-        # hi level is still a real full-pipeline measurement of this code
-        head = {**hi, "source": "scaling_hi_level"}
-    _COMPACT["value"] = head["events_per_sec"] if head else None
-
-    est_cow_rep = head_events / 110_000 + 80
-    if can_reuse and _level_full(prior.get("head_cow"), head_events):
-        head_cow = reuse_section("head_cow")
-    else:
-        fit = int(max((budget.remaining() - 60) // est_cow_rep, 0))
-        n = min(head_reps, fit)
-        head_cow = _median_level(cpus, head_events, 2, "cow", n) if n else None
-    _COMPACT["cow_events_per_sec"] = head_cow["events_per_sec"] if head_cow else None
-
-    # sustained soak: 3× the headline events in bigger epochs — shows fixed
-    # per-epoch cost amortization and compaction over a growing table. Needs
-    # a larger heap than the default 8g (the persisted 48M-row feed plus 32
-    # concurrent tasks exhaust it — GCLocker allocation failures).
-    # Structured Streaming topology (readStream → foreachBatch MoR):
-    # the north-star deployment shape, measured on the full machine
-    stream = None
-    if can_reuse and _level_full(prior.get("streaming"), stream_events):
-        stream, stream_events = reuse_section("streaming"), 0
-    if stream_events and budget.remaining() < stream_events / 200_000 + 120:
-        _log("skipping streaming section (budget)")
-        stream_events = 0
-    if stream_events:
-        # median of N reps, same honesty rule as head/soak/scaling: the r3
-        # artifact's single streaming sample (196k ev/s) sat 37% under r2's
-        # single sample, and a quiet-host A/B (tools/stream_ab.py) later
-        # measured the identical topology at 287k — one draw from a shared
-        # host is NOT a measurement
-        stream_reps = int(os.environ.get("SPARK_GRAFT_STREAM_REPS", "3"))
-        est_stream_rep = stream_events / 200_000 + 100
-        stream_reps = min(
-            stream_reps, int(max((budget.remaining() - 60) // est_stream_rep, 1))
-        )
-        stream_runs = []
-        for _ in range(stream_reps):
-            swork = tempfile.mkdtemp(prefix="stream-bench-", dir="/dev/shm")
+    for i, (name, key, args, bound) in enumerate(SECTIONS):
+        if remaining() < bound + 2 * MARGIN_S:
+            skipped[name] = f"budget: worst case {bound} s, {remaining():.0f} s left"
+        else:
+            _log(f"{name}: perfbench --workload {' '.join(args)}")
             try:
-                out = _run_tracked(
-                    [sys.executable, os.path.join(REPO, "bench.py"), "--stream-child",
-                     str(cpus), str(stream_events), swork],
-                    timeout=3600,
-                )
-                lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
-                if lines:
-                    stream_runs.append(json.loads(lines[-1]))
-                else:
-                    _log(f"stream child failed (rc={out.returncode}): {out.stderr[-500:]}")
-            except subprocess.TimeoutExpired:
-                _log("stream child timed out")
-            finally:
-                shutil.rmtree(swork, ignore_errors=True)
-            if budget.remaining() < est_stream_rep + 60:
-                break
-        if stream_runs:
-            stream_runs.sort(key=lambda s: s["events_per_sec"])
-            # lower-middle on even counts, same convention as _median_level
-            stream = stream_runs[(len(stream_runs) - 1) // 2]
-            stream["all_reps_events_per_sec"] = [
-                s["events_per_sec"] for s in stream_runs
-            ]
-
-    soak = None
-    soak_reps = int(os.environ.get("SPARK_GRAFT_SOAK_REPS", "3"))
-    if can_reuse and _level_full(prior.get("soak"), soak_events):
-        soak, soak_events = reuse_section("soak"), 0
-    if soak_events:
-        est_soak_rep = soak_events / 130_000 + 110
-        fit = int(max((budget.remaining() - 60) // est_soak_rep, 0))
-        soak_reps = min(soak_reps, fit)
-        if not soak_reps:
-            _log("skipping soak section (budget)")
-            soak_events = 0
-    if soak_events:
-        prev_mem = os.environ.get("SPARK_DRIVER_MEMORY")
-        os.environ["SPARK_DRIVER_MEMORY"] = os.environ.get("SPARK_GRAFT_SOAK_MEMORY", "32g")
-        try:
-            # median of N reps, same honesty rule as the scaling pairs — a
-            # single soak sample on this shared host swung 3× between rounds
-            soaks = sorted(
-                (r for r in (run_level(cpus, soak_events, 6, mode="mor")
-                             for _ in range(soak_reps)) if r),
-                key=lambda s: s["events_per_sec"],
-            )
-            if soaks:
-                # lower-middle on even counts, same convention as _median_level
-                soak = soaks[(len(soaks) - 1) // 2]
-                soak["all_reps_events_per_sec"] = [s["events_per_sec"] for s in soaks]
-        finally:
-            if prev_mem is None:
-                del os.environ["SPARK_DRIVER_MEMORY"]
+                sec = sections[name] = perfbench(args, bound)
+            except RuntimeError as e:
+                skipped[name] = str(e)
             else:
-                os.environ["SPARK_DRIVER_MEMORY"] = prev_mem
-    _COMPACT["soak_events_per_sec"] = soak["events_per_sec"] if soak else None
-    _COMPACT["stream_events_per_sec"] = stream["events_per_sec"] if stream else None
+                if key:
+                    _COMPACT[key] = sec.get("events_per_s")
+                if "scaling_eff" in sec["metrics"]:
+                    _COMPACT.update({
+                        "metric": f"cdc_events_per_sec_local{sec.get('cores', cpus)}",
+                        "scaling_efficiency_N_to_4N": sec["metrics"]["scaling_eff"],
+                        "cpu_parity": sec["metrics"]["cpu_parity"]})
+        _log(f"{name}: {skipped.get(name, 'done')} at {total - remaining():.0f} s")
+        if i == 0:  # the MoR headline first, then the driver queries
+            queries()
+    _COMPACT["cdc_correct"] = all(s["correct"] for s in sections.values()) if sections else None
+    _COMPACT["bench_elapsed_s"] = round(total - remaining(), 1)
 
-    scaling = {
-        "efficiency_N_to_4N": efficiency,  # MEDIAN valid pair, normalized
-        "efficiency_best_pair": best_eff,
-        "efficiency_raw_median": raw_median,
-        "efficiency_raw_best": round(raw_eff, 3) if raw_eff is not None else None,
-        # clean = valid AND not hi_side_disturbed (see median derivation)
-        "efficiency_clean_median": clean_eff,
-        "efficiency_raw_clean_median": clean_raw,
-        "clean_pairs": len(clean),
-        "valid_pairs": sum(1 for p in all_pairs if p["valid"]),
-        "fresh_pairs_this_run": len(pairs),
-        "host_disturbed": host_disturbed,
-        "profile_pair": profile_pair,
-        "parity_clean_raw_median": parity_clean_median,
-        "parity_clean_pairs": len(parity_clean),
-        "hi_level_spread": _level_spread("hi"),
-        "lo_level_spread": _level_spread("lo"),
-        "calibration_observed_top": {k: [round(x, 3) for x in v] for k, v in _OBS_TOP.items()},
-        "calibration_floors": {k: round(_abs_floor(k), 3) for k in _ABS_FLOORS},
-        "all_pairs": all_pairs,
-    }
-    if best is not None:
-        scaling.update(
-            {
-                f"local[{lo['cores']}]": lo,
-                f"local[{hi['cores']}]": hi,
-                "hardware_parallel_ceiling": round(ceiling, 3),
-                "bandwidth_parallel_ceiling": best.get("bandwidth_ceiling"),
-                "calibration_tasks_per_sec": {
-                    f"{n_lo}_cores": cal_lo,
-                    f"{n_lo * 4}_cores": cal_hi,
-                },
-            }
-        )
-    result = {
-        "metric": "cdc_events_per_sec_local%d" % cpus,
-        "value": head["events_per_sec"] if head else None,
-        "unit": "events/sec",
-        "cow_events_per_sec": head_cow["events_per_sec"] if head_cow else None,
-        "head": head,
-        "head_cow": head_cow,
-        "soak": soak,
-        "streaming": stream,
-        "queries": queries,
-        "queries_reused_from": queries_reused,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "code_fingerprint": fingerprint,
-        "bench_protocol": protocol,
-        "bench_budget_s": budget.total,
-        "bench_elapsed_s": round(budget.elapsed(), 1),
-        "scaling": scaling,
-    }
-
-    _write_bench_md(
-        lo=lo, hi=hi, head=head, head_cow=head_cow, soak=soak, stream=stream,
-        queries=queries, efficiency=efficiency, best_eff=best_eff,
-        raw_median=raw_median, raw_eff=raw_eff, ceiling=ceiling,
-        cal_lo=cal_lo, cal_hi=cal_hi, best=best, scored=scored,
-        all_pairs=all_pairs, max_tries=max_tries, n_events=scale_events,
-        epochs=scale_epochs, sf=sf, cpus=cpus, fingerprint=fingerprint,
-        min_cache_ceil=min_cache_ceil, min_bw_ceil=min_bw_ceil,
-        clean_eff=clean_eff, clean_raw=clean_raw, n_clean=len(clean),
-        profile_pair=profile_pair, hi_spread=_level_spread("hi"),
-        lo_spread=_level_spread("lo"),
-    )
-
-    # Full detail → BENCH.json (the driver's round artifact can pick the file
-    # up whole); stdout gets ONE compact JSON line with the contract fields —
-    # r01's line carried every calibration pair and overflowed the driver's
-    # capture window, degrading its record to an unparseable tail blob.
-    with open(os.path.join(REPO, "BENCH.json"), "w") as fh:
-        json.dump(result, fh)
-    # the full artifact above already carries every fresh pair — a signal
-    # arriving after this point must not merge them in a second time
-    _PARTIAL["fresh_pairs"] = []
+    result = {**_COMPACT, "query_cores": cpus, "sf_dir": sf_dir, "sections": sections}
+    with open(OUT_JSON, "w") as fh:
+        json.dump(result, fh, indent=1)
+    with open(OUT_MD, "w") as fh:
+        fh.write(bench_md(result))
+    signal.alarm(0)
     _emit_compact()
 
 
-def _write_bench_md(
-    *, lo, hi, head, head_cow, soak, stream, queries, efficiency, best_eff,
-    raw_median, raw_eff, ceiling, cal_lo, cal_hi, best, scored, all_pairs,
-    max_tries, n_events, epochs, sf, cpus, fingerprint,
-    min_cache_ceil=0.7, min_bw_ceil=0.8,
-    clean_eff=None, clean_raw=None, n_clean=0,
-    profile_pair=None, hi_spread=None, lo_spread=None,
-) -> None:
+def _fmt(v) -> str:
+    if not isinstance(v, float):
+        return "—" if v is None else str(v)
+    return f"{v:.4g}" if abs(v) < 1e4 else f"{v:.0f}"
+
+
+def bench_md(r: dict) -> str:
     from openmrs_module_epts_etl_spark.session import STREAMING_TRANSPORT, TUNED_TRANSPORT
 
-    shuffle_codec = TUNED_TRANSPORT["spark.io.compression.codec"]
-    bypass_thr = TUNED_TRANSPORT["spark.shuffle.sort.bypassMergeThreshold"]
-    stream_thr = STREAMING_TRANSPORT["spark.shuffle.sort.bypassMergeThreshold"]
-    if best is None or head is None:
-        return  # partial emergency run: keep the last full BENCH.md
-    rows = [
-        f"| local[{lo['cores']}] (pinned) | mor | {lo['events']} | {lo['wall_sec']} | {lo['events_per_sec']} |",
-        f"| local[{hi['cores']}] (pinned) | mor | {hi['events']} | {hi['wall_sec']} | {hi['events_per_sec']} |",
-        f"| local[{head['cores']}] (headline) | mor | {head['events']} | {head['wall_sec']} | {head['events_per_sec']} |",
-    ]
-    if head_cow:
-        rows.append(
-            f"| local[{head_cow['cores']}] (headline) | cow | {head_cow['events']} | {head_cow['wall_sec']} | {head_cow['events_per_sec']} |"
-        )
-    if soak:
-        rows.append(
-            f"| local[{soak['cores']}] (soak, 32g heap) | mor | {soak['events']} "
-            f"| {soak['wall_sec']} | {soak['events_per_sec']} |"
-        )
-    if stream:
-        rows.append(
-            f"| local[{stream['cores']}] (readStream→foreachBatch) | stream-mor "
-            f"| {stream['events']} | {stream['wall_sec']} | {stream['events_per_sec']} |"
-        )
-    table = "\n".join(rows)
+    thr, codec = "spark.shuffle.sort.bypassMergeThreshold", "spark.io.compression.codec"
+    secs = r["sections"]
+    host = next((s["host"] for s in secs.values() if "host" in s), {})
+    gated = ("cpu_s_per_mevent", "write_amp", "setup_s", "peak_rss_mb")
+    rows = [f"| {n} | {_fmt(s.get('events_per_s'))} | {s['correct']} | "
+            + " | ".join(_fmt(s["metrics"].get(k)) for k in gated) + " |"
+            for n, s in secs.items() if n != "layers"]
+    layers = secs.get("layers", {}).get("metrics", {})
+    lrows = [f"| {k} | {_fmt(v)} |" for k, v in layers.items() if v]
+    qrows = [f"| {k} | {v} |" for k, v in r["queries"].items()]
+    skips = [f"- **{k}**: {v}" for k, v in r["skipped"].items()] or ["- none"]
+    nl = "\n"
+    return f"""# BENCH — bench.py over perfbench/run.py
 
-    def _reps(sec) -> str:
-        r = (sec or {}).get("all_reps_events_per_sec")
-        return "[" + ", ".join(str(v) for v in r) + "]" if r else "[1 rep]"
+Host: {host.get('nproc', '?')} CPUs ({host.get('cpu_model', '?')}), {host.get('mem_total_mb', '?')} MB RAM;
+engine {host.get('engine', '?')}; {r['bench_elapsed_s']} s of a {r['bench_budget_s']:.0f} s budget.
+BENCH_r01–r05 were measured on a 32-core host and are not comparable.
 
-    rep_lines = "; ".join(
-        f"{name} {_reps(sec)}"
-        for name, sec in (("head", head), ("cow", head_cow), ("soak", soak),
-                          ("stream", stream))
-        if sec is not None
-    )
-    qrows = "".join(f"| {k} | {v} |\n" for k, v in queries.items())
-    if profile_pair:
-        pp_lo, pp_hi = profile_pair["lo"], profile_pair["hi"]
-        profile_md = f"""
-**Committed quiet-window profile** (JSON `scaling.profile_pair`): **raw
-N→4N {profile_pair["raw"]} at CPU-bill parity {profile_pair["cpu_parity"]}×**
-(lo: {pp_lo["events_per_sec"]} ev/s, {pp_lo["exec_cpu_sec"]} executor-CPU-s,
-stage utilization {pp_lo["stage_util"]}; hi: {pp_hi["events_per_sec"]} ev/s,
-{pp_hi["exec_cpu_sec"]} CPU-s, utilization {pp_hi["stage_util"]}; level order
-{profile_pair["order"]}). Every scaling level now reports its stage-level
-CPU bill from the Spark REST API, so the back-to-back profile that round 4
-could only cite as BASELINE.md prose is a first-class, fingerprint-stamped
-part of this artifact — and the CPU bill turns the previously PROBE-BLIND
-host phase into a measured quantity: memory-stall cycles bill as CPU time,
-so a window where co-tenants pressure the shared socket shows the 8-core
-level "working harder" for byte-identical work (this pool measured hi-level
-bills of 379–384 CPU-s on the slow pairs vs 318–342 on the fast ones —
-`cpu_parity` 1.29 vs 1.08 — while `cpu_over_run` sat at 0.84–0.88 for every
-level, ruling out steal and leaving bill inflation as the phase's
-signature; a real N-vs-4N-node cluster multiplies memory channels and does
-not share its socket, so parity-inflated windows measure the co-tenant).
-**Work-parity pairs (cpu_parity ≤ 1.1): {profile_pair["parity_clean_pairs"]}
-of the valid pool, raw median {profile_pair["parity_clean_raw_median"]}.**
-The profile pair is the BEST raw among them — explicitly a labeled
-demonstration bound (what the engine does when the host delivers the CPU it
-bills), not the headline; the parity-clean median is the principled middle
-ground, and the all-valid pool median above remains the headline.
-"""
-    else:
-        profile_md = ""
-    spread_md = ""
-    if hi_spread and lo_spread:
-        spread_md = f"""
-Per-level spread across valid pairs — hi (8-core): {hi_spread["min"]}–\
-{hi_spread["max"]} ev/s (median {hi_spread["median"]}, n={hi_spread["n"]}); \
-lo (2-core): {lo_spread["min"]}–{lo_spread["max"]} ev/s (median \
-{lo_spread["median"]}). The hi-side swing with no lo-side counterpart IS the \
-unobservable host phase the pool median averages over; pair level order \
-alternates lo-hi / hi-lo across attempts (JSON `order` per pair) so a \
-one-sided phase deflates half the pairs and inflates the other half instead \
-of deflating them all.
-"""
-    n_valid = sum(1 for p in all_pairs if p["valid"])
-    if n_valid:
-        median_desc = (
-            f'the MEDIAN of {n_valid} host-stationary ("valid") calibrated pairs out of\n'
-            f"{len(all_pairs)} in the pool"
-        )
-    else:
-        median_desc = (
-            f"**the host never passed the stationarity gates this run** (0 valid of\n"
-            f"{len(all_pairs)} pairs; JSON flags `host_disturbed`), so this number is the\n"
-            f"FALLBACK median over all — disturbed — pairs and understates the engine"
-        )
-    with open(os.path.join(REPO, "BENCH.md"), "w") as fh:
-        fh.write(
-            f"""# BENCH — measured locally by bench.py (code fingerprint {fingerprint})
+## CDC workloads (perfbench, seed 1; shapes and metric meanings in perfbench/spec.json)
 
-## CDC replay throughput (north rule: two cluster sizes, identical input)
+| section | events/s | correct | {' | '.join(gated)} |
+|---|---|---|---|---|---|---|
+{nl.join(rows)}
 
-| parallelism | mode | events | wall (s) | events/sec |
-|---|---|---|---|---|
-{table}
+mor = `mor-replay-skewed` (the headline `value`), cow = `cow-trickle-uniform`, stream =
+`stream-open-loop`. The stream is **open loop**: files arrive at a fixed offered rate, which
+bounds its events/s; it shows whether the engine keeps up, not the engine's capacity.
+**Scaling 1→{secs.get('mor', {}).get('cores', '?')} cores: {_fmt(r.get('scaling_efficiency_N_to_4N'))}**
+(target ≥ 0.8 per BASELINE.json), CPU-bill parity {_fmt(r.get('cpu_parity'))}: the same first
+epochs of the same feed pinned to 1 core and to all cores (`--scaling`). Shuffle transport:
+batch sessions (session.py TUNED_TRANSPORT) use **{TUNED_TRANSPORT[codec]}** and
+`{thr}={TUNED_TRANSPORT[thr]}`; the stream section's streaming profile (session.py
+STREAMING_TRANSPORT, `get_spark(profile="streaming")`) uses `{thr}={STREAMING_TRANSPORT[thr]}`.
 
-Median-of-N sections publish the LOWER-middle rep on even rep counts (the
-conservative of the two central reps — a dict result cannot average; scalar
-medians average the two middles). Per-rep events/s, so the host-phase spread
-is visible next to the number it produced: {rep_lines}.
+Skipped sections:
+{nl.join(skips)}
 
-Modes: **mor** = merge-on-read ingest (epoch appends lsn-stamped deduped
-deltas; compaction every 4 epochs *inside* the timed region plus a final
-compaction, so this is sustained operation, not an append-only burst;
-cdc/mor.py). **cow** = copy-on-write MERGE (per-epoch lsn-guarded rewrite of
-affected partitions; cdc/merge.py). Both reach the identical final table
-state (same oracle; test_mor.py proves state equality); MoR is the
-ingest-optimized path a 10^10-event/day deployment would run, and its
-append-dominated epochs are also why it scales better — per-epoch work is one
-dedupe shuffle + one clustered write, no table-sized rewrite.
+## Per-layer breakdown: one traced `mor-replay-skewed` run, per-call medians
 
-Shuffle transport (values interpolated from the live session config,
-session.py TUNED_TRANSPORT): **{shuffle_codec}** shuffle/spill compression
-with a **{bypass_thr}-partition shuffle-writer crossover**
-(`spark.shuffle.sort.bypassMergeThreshold={bypass_thr}`): shuffles with
-≤{bypass_thr} reduce partitions use the bypass writer (streams straight to
-per-partition files, no in-memory row buffering — the payload-wide MoR
-compaction exchange spilled 2.9 GB/task under the sort writer at 8 cores),
-wider shuffles use the sort-based writer (one compressed spill stream per
-task; at 128+ partitions the bypass writer's per-stream zstd contexts ×
-concurrent tasks throttled the map stage to 333k ev/s vs 659k). The ingest
-path is memory-bandwidth-bound at high core counts — a perfectly parallel
-numpy streaming sum scales at only ~0.6 efficiency 2→8 cores on this host
-class because DRAM saturates before the cores do, and a real cluster node's
-shuffle crosses a NIC with far less bandwidth per core than local DRAM.
-zstd moves ~2× fewer bytes through that bottleneck for CPU the
-bandwidth-starved levels have to spare: measured on the 32M-event MoR
-replay, 8-core throughput 301k → 507k events/s versus lz4.
+| layer metric | value |
+|---|---|
+{nl.join(lrows)}
 
-The **stream-mor row alone** runs under the dedicated STREAMING session
-profile (session.py STREAMING_TRANSPORT, selected at launch via
-`get_spark(profile="streaming")`):
-`spark.shuffle.sort.bypassMergeThreshold={stream_thr}` — Spark's stock
-writer crossover, which the micro-batch path prefers (+15% measured,
-tools/stream_ab.py) because its ~1M-row shuffles never hit the open-stream
-cliff the batch default guards against. Every other row uses the batch
-transport above.
-
-**Scaling efficiency N→4N: {efficiency}** (target ≥ 0.8 per BASELINE.json) —
-{median_desc} (pairs from a prior run of byte-identical code —
-same fingerprint — carry `from_prior_run`) (best pair: {best_eff}; raw medians/best:
-{raw_median}/{round(raw_eff, 3)}). **Clean-pairs-only median: {clean_eff}
-(raw {clean_raw}) over {n_clean} pair(s)** — "clean" = valid AND not
-hi-side-disturbed; disturbed pairs are kept in the full median as explicit
-lower bounds (co-tenant steal during their 8-core window can only have cost
-the engine), so the clean median is the pool's best unbiased estimate while
-the full median RETAINS the conservative members — retention, not a floor:
-members that are individually lower bounds do not make the pooled median a
-bound on anything. A hi-side-disturbed pair's NORMALIZED value
-divides by a ceiling taken from the pool's robust undisturbed anchor, not its
-own steal-deflated calibration — its normalized is therefore also a lower
-bound, never inflated by the disturbance. Each pair platform-normalized: raw
-wall-clock efficiency divided by this VM's own parallel-scaling ceiling
-({round(ceiling, 3)} for the best pair), measured with a
-pinned, perfectly-parallel, shuffle-free python busy-loop run immediately
-before each level — same host state as the adjacent engine run ({cal_lo}
-tasks/s at {lo['cores']} cores vs {cal_hi} tasks/s at {hi['cores']} cores;
-ceiling clamped to [0.5, 1.0]). The sandbox VM does not scale linearly even
-for embarrassingly parallel non-JVM work, and its behavior drifts minute to
-minute (virtualized frequency / co-tenant steal, uncontrollable from the
-guest), so the per-pair ceiling — not 4.0 — is the denominator a faithful
-cluster analogy permits. A second, memory-bandwidth-bound ceiling (streaming
-64 MB numpy sums; this pair: {best.get("bandwidth_ceiling")}) is reported per
-pair as `bandwidth_ceiling` — the busy-loop is cache-resident and stays
-near-linear even when co-tenants saturate DRAM (which is what actually
-throttles shuffle), so shuffle-bound engine work sits between the two bounds;
-normalization deliberately uses only the conservative cache-resident ceiling.
-{profile_md}{spread_md}
-A pair is **valid** iff the host itself passed stationarity gates during it:
-cache ceiling within [{min_cache_ceil}, 1.15], bandwidth ceiling ≥
-{min_bw_ceil}, and the lo-level calibrations repeated after the pair within
-±25% (cache) / ±50% (bandwidth) of the before values. The gates look only at
-calibration (host) signals, never at the engine's own result — one observed
-round ran while co-tenants squeezed DRAM so hard the *bandwidth calibration
-itself* scaled at 0.37 and the engine's raw efficiency exceeded that hardware
-bound; such a pair measures the co-tenant, not the engine. The bandwidth gate
-is strict ({min_bw_ceil}) because the engine is shuffle/bandwidth-bound while
-the cache-resident ceiling used for normalization deliberately is not: on a
-DRAM-squeezed window the engine under-scales against a denominator that never
-budged, so the pair enters the median at a penalty that measures the
-co-tenant. A window whose own streaming-numpy scaling is below {min_bw_ceil}
-cannot evidence the engine either way and is rejected — cheaply, by
-pre-gating on the before-level calibrations so the engine levels are never
-run. Ratio gates alone cannot see UNIFORM co-tenant steal (a host running
-both probes at 70% of idle speed still shows clean hi/lo ratios, while the
-engine's 8-core level starves on the socket's reduced ABSOLUTE bandwidth), so
-each pair must also clear absolute calibration floors. "Idle speed" is not a
-constant of this VM (its effective clock drifts day to day), so the floors
-are RELATIVE: each probe must reach {_REL_FLOOR:.0%} of the SECOND-fastest
-observation of that probe anywhere in the pool record (a robust anchor — a
-single anomalous turbo/glitch sample cannot retroactively demote the whole
-pool; the record spans every calibration this session, skipped windows
-included, plus every stored pair's) — with
-loose static sanity bounds (~half the slowest historical quiet observation)
-underneath (this run: cache ≥ {_abs_floor("c_lo")}/{_abs_floor("c_hi")},
-bw ≥ {_abs_floor("cb_lo")}/{_abs_floor("cb_hi")} tasks/s at lo/hi cores;
-all env-tunable). The single-socket stand-in for a 4×-node cluster is only
-faithful when the socket's own attainable bandwidth is actually on offer.
-Validity is re-derived from each pair's stored calibration numbers under
-the gates in force at load time, so a gate change re-judges every pooled pair
-identically instead of grandfathering old admissions. Invalid pairs are still
-reported (JSON `scaling.all_pairs`, with `invalid_reasons`) so nothing is
-hidden; if no pair is valid the median falls back to all pairs and the JSON
-flags `host_disturbed`.
-
-Methodology: each level runs in its own subprocess pinned with
-``sched_setaffinity`` to exactly N cpus (JVM GC/JIT/IO threads included, like
-an N-core cluster node); a warmup replay precedes the timed region; table and
-shuffle directories live on tmpfs; calibrated (lo, hi) pairs are measured
-back-to-back until {os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")} pass the
-host-stationarity gates (at most {max_tries} attempts, and never past the
-wall-clock budget SPARK_GRAFT_BENCH_BUDGET_S — the run degrades pair count
-rather than overrunning the driver's timeout); the headline efficiency is
-the MEDIAN over valid pairs' normalized efficiencies — the mean of the two
-central pairs on even counts — with the best pair reported alongside (a
-best-of-N selection alone would flatter one lucky host phase).
-
-Feed: {n_events} events in {epochs} epochs, 30% hot-key skew on 3
-conversations, out-of-order window 50k, mid-stream additive schema evolution
-at the halfway lsn, deletes + reinserts included. The replay is the full
-pipeline: max-lsn dedupe → bucket-pruned planning semi-join → lsn-guarded
-MERGE (insert/update/delete/tombstone) → atomic lake commit with
-per-partition lineage metrics, checkpoint after every epoch.
-
-## Headline queries (sf={sf}, local[{cpus}]) — seconds
+## Headline queries (sf={r['sf']}, local[{r['query_cores']}]): best timed pass after an untimed one, s
 
 | query | sec |
 |---|---|
-{qrows}"""
-        )
+{nl.join(qrows)}
+"""
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--cdc-child":
-        cdc_child(
-            int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4]), sys.argv[5],
-            sys.argv[6] if len(sys.argv) > 6 else "cow",
-            sys.argv[7] if len(sys.argv) > 7 else None,
-        )
-    elif len(sys.argv) > 1 and sys.argv[1] == "--stream-child":
-        stream_child(int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
-    else:
-        try:
-            main()
-        except Exception:
-            # last-resort contract keeper: whatever sections landed before
-            # the exception still reach the driver as one parseable line
-            import traceback
-
-            traceback.print_exc(file=sys.stderr)
-            _emit_compact()
-            sys.exit(1)
+    try:
+        main()
+    except Exception:  # last-resort contract keeper: whatever landed still reaches the driver
+        traceback.print_exc(file=sys.stderr)
+        _emit_compact()
+        sys.exit(1)

@@ -8,8 +8,8 @@ deletes/reinserts, late events, mid-stream schema evolution).
 
 Scale design: one event per ``spark.range`` id, every attribute derived with
 seeded ``xxhash64`` arithmetic — embarrassingly parallel, zero shuffle, no
-Python in the loop, identical output at any parallelism (the two-cluster-size
-bench requires byte-identical input at local[8] and local[32]).
+Python in the loop, identical output at any parallelism (the benchmark's
+scaling pair replays byte-identical input at 1 core and at all cores).
 """
 
 from __future__ import annotations

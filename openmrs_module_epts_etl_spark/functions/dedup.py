@@ -417,9 +417,10 @@ def connected_components(
     lazily instead — the convergence count is then the job that both
     materializes the cache and counts — and even rounds still checkpoint,
     truncating the logical plan every two jumps so lineage stays bounded
-    for deep label trees. Cached odd-round frames are released at exit
-    (correctness never depends on the cache: an unpersisted frame just
-    recomputes its — at most two-round — lineage).
+    for deep label trees. A cached odd-round frame is released as soon as
+    the next round's checkpoint has materialized, so at most one round frame
+    is cached at a time (correctness never depends on the cache: an
+    unpersisted frame just recomputes its — at most two-round — lineage).
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = (
@@ -433,7 +434,7 @@ def connected_components(
         .select(F.col("src").alias("id"), F.least("src", "m").alias("comp"))
         .localCheckpoint()
     )
-    cached: list[DataFrame] = []
+    cached: DataFrame | None = None
     for i in range(max_iter):
         nbr = (
             edges.join(
@@ -451,23 +452,25 @@ def connected_components(
             "comp",
         ).select("id", "prev", F.col("cc").alias("comp"))
         if i % 2 == 0:
-            jumped = jumped.persist()
-            cached.append(jumped)
+            jumped = cached = jumped.persist()
         else:
+            # the eager checkpoint has read the previous round's cached
+            # blocks; nothing needs them any more
             jumped = jumped.localCheckpoint()
+            cached.unpersist()
+            cached = None
         changed = jumped.filter(F.col("comp") != F.col("prev")).count()
         comp = jumped.select("id", "comp")
         if changed == 0:
             break
     edges.unpersist()
-    if cached and i % 2 == 0:
+    if cached is not None:
         # the final comp's blocks live in the last cached frame; hand the
         # caller a checkpointed result first so the unpersist below cannot
         # force a recompute of the returned labels (cheap: the checkpoint
         # job reads the cached blocks)
         comp = comp.localCheckpoint()
-    for df in cached:
-        df.unpersist()
+        cached.unpersist()
     return comp
 
 

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 # Single source of truth for the tuned static transport confs: get_spark
-# applies them, bench.py's BENCH.md template interpolates them, and
+# applies them, the BENCH.md that bench.py generates states them, and
 # tests/test_bench_artifact.py asserts the committed BENCH.md prose matches —
 # so the artifact can never again contradict the code it fingerprints (the
 # round-3 BENCH.md described a bypassMergeThreshold=1 policy the session had
@@ -30,8 +30,8 @@ TUNED_TRANSPORT = {
 # tens of ms, where the sort writer's per-task row buffering is pure
 # overhead and the bypass writer's open-stream count stays harmless even at
 # 128-200 partitions: restoring Spark's stock 200-partition crossover
-# measured +15% sustained streaming throughput (3/3 alternating A/B reps,
-# tools/stream_ab.py: 295k → 341k ev/s median, 4M events, local[32]). The
+# measured +15% sustained streaming throughput (3/3 alternating A/B reps on
+# a 32-core host: 295k → 341k ev/s median, 4M events, local[32]). The
 # batch default of 64 protects the 32M-row payload exchanges the batch
 # replay runs (see the crossover note below); the two shapes never share a
 # session in deployment, so each gets its own right answer.

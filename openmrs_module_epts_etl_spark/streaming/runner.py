@@ -105,8 +105,8 @@ class StreamingCdcRunner:
         # ``get_spark(profile="streaming")`` — micro-batch shuffles move ~1M
         # rows for tens of ms, where the batch profile's sort-writer
         # crossover (64, tuned for 32M-row payload exchanges) costs a
-        # measured 15% of sustained throughput (3/3 alternating A/B reps,
-        # tools/stream_ab.py: 295k → 341k ev/s median at 4M events).
+        # measured 15% of sustained throughput (3/3 alternating A/B reps on
+        # a 32-core host: 295k → 341k ev/s median at 4M events).
         # bypassMergeThreshold is a LAUNCH-TIME core conf (Spark raises
         # CANNOT_MODIFY_CONFIG on a live session), so the runner can only
         # surface the mismatch, not fix it: transport_profile=True (default)

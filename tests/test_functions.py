@@ -227,6 +227,42 @@ def test_connected_components_long_chain_log_rounds(spark):
     assert {r["comp"] for r in rows} == {0}
 
 
+def test_connected_components_keeps_one_cached_round(spark, monkeypatch):
+    """A long path needs many label-propagation rounds; each persisted round
+    frame must be released once the next round's checkpoint has
+    materialized, so at most the edge list and one round frame are cached
+    at any moment (not one frame per two rounds until the call returns)."""
+    from openmrs_module_epts_etl_spark.functions.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(300)], "id_a long, id_b long"
+    )
+    cls = type(pairs)
+    persist, unpersist = cls.persist, cls.unpersist
+    live: set[int] = set()
+    peak, calls = [0], [0]
+
+    def counting_persist(self, *a, **kw):
+        live.add(id(self))
+        calls[0] += 1
+        peak[0] = max(peak[0], len(live))
+        return persist(self, *a, **kw)
+
+    def counting_unpersist(self, *a, **kw):
+        live.discard(id(self))
+        return unpersist(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", counting_persist)
+    monkeypatch.setattr(cls, "unpersist", counting_unpersist)
+    rows = connected_components(pairs).collect()
+    # the edge list plus one frame per two rounds: >= 3 round frames = >= 6 rounds
+    assert calls[0] >= 4
+    assert peak[0] <= 2
+    assert not live
+    assert sorted(r["id"] for r in rows) == list(range(301))
+    assert {r["comp"] for r in rows} == {0}
+
+
 def test_connected_components_empty(spark):
     from openmrs_module_epts_etl_spark.functions.dedup import connected_components
 

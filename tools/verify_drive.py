@@ -142,7 +142,7 @@ def flow2_driver_contract(spark) -> None:
 
 def main() -> None:
     root = tempfile.mkdtemp(prefix="verify_drive_")
-    spark = get_spark(master="local[8]")
+    spark = get_spark()  # local[$SPARK_GRAFT_CPUS] when set
     try:
         flow1_cdc(spark, root)
         flow2_driver_contract(spark)
