@@ -7,7 +7,7 @@ from .schemas import (
 )
 from .conflict import KEEP_EXISTING, NEWER_WINS, UPDATE_EXISTING, ConflictPolicy
 from .generator import FeedSpec, generate_feed
-from .dedupe import dedupe_latest, dedupe_latest_salted
+from .dedupe import dedupe_latest
 from .merge import MergeResult, compact, merge_into, vacuum_tombstones
 from .changelog import CHANGE_TYPE_COL, changes_as_feed, snapshot_diff
 from .follow import TableFollower
@@ -34,7 +34,6 @@ __all__ = [
     "FeedSpec",
     "generate_feed",
     "dedupe_latest",
-    "dedupe_latest_salted",
     "MergeResult",
     "merge_into",
     "vacuum_tombstones",

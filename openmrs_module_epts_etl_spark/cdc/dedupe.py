@@ -15,16 +15,26 @@ Physical strategy (measured, 4M rows / 8 cores, see BENCH.md):
   Tungsten hash aggregation: Spark sorts the full payload on BOTH sides of
   the exchange (~9 s, and it barely scales 2→8 cores because the sorts
   dominate).
-- The implementation here is **narrow-agg + join-back**: ``max(lsn)`` per key
-  is a pure HashAggregate over ~24-byte rows with map-side partial
+- The generic ``dedupe_latest`` is **narrow-agg + join-back**: ``max(lsn)``
+  per key is a pure HashAggregate over ~24-byte rows with map-side partial
   aggregation (a hot conv_id pre-reduces inside every map task), then a
   ``left_semi`` join on (key, lsn) re-attaches the payload (~2-3 s, scales).
   The build side is winner keys only; ``shuffle_hash`` keeps it scalable when
   winners exceed broadcast size, and AQE still demotes to broadcast-hash when
   the winner set is small. The payload is never sorted and never aggregated.
+- ``dedupe_latest_clustered`` (MoR compaction and deduped appends on
+  ``mbucket`` tables) is **one exchange + partition-local rank**: the
+  payload is repartitioned once on the cluster column and ``rank() == 1``
+  over (key, lsn desc) picks the winners inside each partition (Sort →
+  WindowGroupLimit → Window). One scan, one exchange, no aggregate, no
+  join; the output keeps the cluster partitioning the ``arrange=False``
+  write needs. On a 4-CPU host (150k-event skewed MoR replay) this bills
+  the compaction 1.75 executor CPU-s where the narrow-agg + join-back form
+  bills 2.09: its second scan, second exchange, aggregate and join cost
+  more than sorting the clustered partitions.
 
 Invariant: ``order_col`` (lsn = binlog position) is unique per key occurrence;
-a (key, lsn) duplicate would survive the semi-join as two rows. The feed
+a (key, lsn) duplicate would survive either path as two rows. The feed
 contract guarantees lsn uniqueness (exactly-once fences keep re-delivered
 epochs out), matching the reference's assumption that stage-area records have
 distinct ids (api:common/model/EtlStageRecordVO.java:398-418).
@@ -32,7 +42,7 @@ distinct ids (api:common/model/EtlStageRecordVO.java:398-418).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .schemas import TRANSCRIPT_KEY
@@ -140,120 +150,73 @@ def dedupe_latest_clustered(
     use, so a caller that writes the winners pays a second payload exchange
     (write clustering) plus the narrow winner-aggregation exchange. Here the
     payload is repartitioned ONCE on ``cluster_col`` (a prefix of ``key`` —
-    conv_id for transcripts), and Catalyst keeps everything downstream
-    exchange-free: HashPartitioning(cluster_col) satisfies the aggregation's
+    conv_id for transcripts) and the winner is picked inside each partition:
+    ``rank()`` over ``partitionBy(*key).orderBy(order_col desc)``, filtered
+    to rank 1. HashPartitioning(cluster_col) satisfies the window's
     ClusteredDistribution(key) because the partitioning expressions are a
-    subset of the grouping keys, the semi-join's both sides carry the
-    identical partitioning (the winner side inherits it through the
-    partition-local aggregate), and the output still clusters by
-    cluster_col — so a table whose spec buckets by ``mbucket(n, cluster_col)``
-    can write it with ``arrange=False`` and ZERO further exchange as long as
-    ``num_partitions`` is a multiple of n (task id ``pmod(hash(c), N)``
-    determines bucket ``pmod(hash(c), n)``; lake/partitioning.py:mbucket).
+    subset of the key, so Spark plans Sort → WindowGroupLimit → Window with
+    no second scan, no narrow exchange and no join, and the output still
+    clusters by cluster_col — so a table whose spec buckets by
+    ``mbucket(n, cluster_col)`` can write it with ``arrange=False`` and ZERO
+    further exchange as long as ``num_partitions`` is a multiple of n (task
+    id ``pmod(hash(c), N)`` determines bucket ``pmod(hash(c), n)``;
+    lake/partitioning.py:mbucket). ``rank()`` keeps every row tied at the
+    max order value, exactly like ``dedupe_latest``'s (key, order) join-back.
 
     Use when the caller controls the write layout (MoR compaction,
-    deduped-epoch appends). Skew note: after winner selection a hot conv_id
-    is at most one row per turn, so the post-dedupe write skew the plain
-    path's REBALANCE guards against is structurally absent; the PRE-dedupe
-    hot-conv concentration (one task aggregating a 30%-hot conversation) is
-    bounded by the narrow aggregation's map-side combine, same as the plain
-    path.
+    deduped-epoch appends). Skew note: a hot conv_id lands in one task,
+    which sorts its rows; the WindowGroupLimit keeps only the first rank per
+    key, so the post-dedupe write is at most one row per turn and the write
+    skew the plain path's REBALANCE guards against is structurally absent.
 
     CONTRACT (unlike the generic ``dedupe_latest``): key and order columns
-    must be non-NULL — the join-back here uses plain equality, because
-    eqNullSafe keys compile to ``coalesce(k, d), isnull(k)`` expression
-    pairs and Catalyst then requires clustering on THOSE, which a
-    repartition on the raw column can never satisfy (every exchange comes
-    back). The CDC feed contract already guarantees non-null (conv_id,
-    turn_idx, lsn). The contract is ENFORCED, not assumed: under the default
-    ``on_null="error"`` a NULL key/order value raises at execution time
-    (``raise_error`` folded into the order column, so it rides the existing
-    scan — no extra job, no extra shuffle, and column pruning cannot drop it
-    because the order column feeds both the winner aggregation and the
-    join-back). A caller that has pre-filtered NULLs and wants them dropped
-    must say so explicitly with ``on_null="drop"``; callers with legitimate
-    NULL keys want ``dedupe_latest``."""
+    must be non-NULL. The CDC feed contract guarantees non-null (conv_id,
+    turn_idx, lsn), so a NULL there is a corrupt event, and the MoR path
+    that calls this must not store it as a row no real key ever reads. The
+    contract is ENFORCED, not assumed: under the default ``on_null="error"``
+    a NULL key/order value raises at execution time (``raise_error`` folded
+    into the order column, so it rides the existing scan — no extra job, no
+    extra shuffle, and column pruning cannot drop it because the window
+    sorts on the order column). A caller that has pre-filtered NULLs and
+    wants them dropped must say so explicitly with ``on_null="drop"`` (an
+    ``isNotNull`` filter on every key/order column before the exchange);
+    callers with legitimate NULL keys want ``dedupe_latest``."""
     key = key or TRANSCRIPT_KEY
     cluster_col = cluster_col or key[0]
     assert cluster_col in key, "cluster_col must be part of the key"
     if on_null not in ("error", "drop"):
         raise ValueError(f"on_null must be 'error' or 'drop', got {on_null!r}")
+    cols = events.columns
+    any_null = None
+    for c in [*key, order_col]:
+        e = F.col(c).isNull()
+        any_null = e if any_null is None else any_null | e
     if on_null == "error":
-        any_null = None
-        for c in [*key, order_col]:
-            e = F.col(c).isNull()
-            any_null = e if any_null is None else any_null | e
         msg = (
             "dedupe_latest_clustered: NULL in key/order column "
             f"({', '.join([*key, order_col])}) violates the non-null "
             "feed contract; use dedupe_latest for NULL-keyed data "
             "or pass on_null='drop' after pre-filtering"
         )
-        # EVERY key/order column is guard-wrapped, not just the order column:
-        # the semi-join infers IsNotNull on its (plain-equality) join keys and
-        # pushes those filters BENEATH this projection, so a raw key column
-        # would let the inferred filter drop the NULL row before any guarded
-        # expression runs (observed in the physical plan). With each join key
-        # an alias of the CASE guard, the pushed-down filter itself must
-        # evaluate the guard — the raise fires on the first conjunct.
-        events = events.select(
-            *[
-                F.when(
-                    any_null,
-                    F.raise_error(F.lit(msg)).cast(events.schema[c].dataType),
-                )
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in (*key, order_col)
-                else F.col(c)
-                for c in events.columns
-            ]
+        # Only the order column carries the guard: the window sorts every
+        # row on it, so the guard (which reads every key column) runs on
+        # every row, and no inferred filter sits beneath it to drop a NULL
+        # row unseen.
+        events = events.withColumn(
+            order_col,
+            F.when(any_null, F.raise_error(F.lit(msg)).cast(events.schema[order_col].dataType))
+            .otherwise(F.col(order_col)),
         )
-    cols = events.columns
+    else:
+        events = events.filter(~any_null)
 
-    def _cluster(df: DataFrame) -> DataFrame:
-        if num_partitions:
-            return df.repartition(num_partitions, F.col(cluster_col))
-        return df.repartition(F.col(cluster_col))
-
-    # The narrow branch repartitions a PRE-PROJECTED (key, order) frame
-    # rather than sharing the payload exchange: exchange reuse would make the
-    # aggregation re-READ the full-width shuffle (no column pruning through a
-    # reused exchange), doubling shuffle-read bytes to save a ~24-byte/row
-    # map side. Both exchanges hash the same expression to the same count, so
-    # the join and the downstream write stay exchange-free either way.
-    clustered = _cluster(events)
-    winners = (
-        _cluster(events.select(*key, order_col))
-        .groupBy(*key)
-        .agg(F.max(order_col).alias(order_col))
-    )
-    w = winners.hint("shuffle_hash")
-    cond = None
-    for c in [*key, order_col]:
-        e = clustered[c] == w[c]
-        cond = e if cond is None else cond & e
-    return clustered.join(w, cond, "left_semi").select(*cols)
-
-
-def dedupe_latest_salted(
-    events: DataFrame,
-    key: list[str] | None = None,
-    order_col: str = "lsn",
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Two-stage salted variant of the narrow winner aggregation: stage 1
-    takes max(order_col) per (key, salt), stage 2 per key, then the same
-    left-semi join-back re-attaches the payload. Equivalent result; use when
-    a single composite key value dominates the batch so heavily that even the
-    narrow partial-aggregation hash maps skew (e.g. one turn updated millions
-    of times per batch). The salt is derived from the order column, so
-    distribution is uniform and deterministic."""
-    key = key or TRANSCRIPT_KEY
-    cols = events.columns
-    salted = events.select(
-        *key, F.col(order_col), F.pmod(F.col(order_col), F.lit(salt_buckets)).cast("int").alias("__salt")
-    )
-    stage1 = salted.groupBy(*key, "__salt").agg(F.max(order_col).alias(order_col))
-    winners = stage1.groupBy(*key).agg(F.max(order_col).alias(order_col))
-    return _join_back(events, winners, key, order_col).select(*cols)
+    if num_partitions:
+        clustered = events.repartition(num_partitions, F.col(cluster_col))
+    else:
+        clustered = events.repartition(F.col(cluster_col))
+    # temp rank column name salted against the input's own columns
+    r = "__rank"
+    while r in cols:
+        r += "_"
+    w = Window.partitionBy(*key).orderBy(F.col(order_col).desc())
+    return clustered.withColumn(r, F.rank().over(w)).filter(F.col(r) == 1).select(*cols)

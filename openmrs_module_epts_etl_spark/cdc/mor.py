@@ -8,10 +8,12 @@ the dual trade: ingest appends small delta files and defers conflict
 resolution to readers and to a periodic compaction. This module is that dual,
 over the same lake format, same event semantics, same fences:
 
-- **append_delta**: dedupe the batch per key (max-lsn winner via the same
-  narrow-agg + join-back operator as CoW), stamp ``_lsn``/``_origin``/
-  ``_deleted`` and append. No target scan, no planning join, no rewrite: one
-  shuffle (dedupe) + one clustered write per epoch, which is why ingest
+- **append_delta**: append the batch, optionally deduped per key first
+  (max-lsn winner: the narrow-agg + join-back operator CoW uses, or on an
+  ``mbucket`` table the one-exchange partition-local ``rank()`` of
+  ``dedupe_latest_clustered``), stamp ``_lsn``/``_origin``/``_deleted``.
+  No target scan, no planning join, no rewrite: one clustered write per
+  epoch (plus the dedupe shuffle when asked for), which is why ingest
   scales like the append it is. Epoch fencing is identical to CoW
   (commit-log (fence_key, epoch_id)), so replays are no-ops.
 - **read_state**: snapshot read = latest row per key by ``_lsn`` with delete
@@ -21,11 +23,12 @@ over the same lake format, same event semantics, same fences:
   semantics (newer-wins ≈ observationDateFields,
   api:model/EtlDatabaseObject.java:677-714) are therefore byte-identical
   between modes.
-- **compact_latest**: collapse all versions of each key to the winner (one
-  partition-local... shuffle bounded per conv_id bucket since buckets are
-  key-derived), rewriting the table back to one-row-per-key — after which
-  reads are plain scans again. Run every K epochs or by delta-file-count
-  policy; replay-safe via its own fence.
+- **compact_latest**: collapse all versions of each key to the winner (on
+  an ``mbucket`` table one payload exchange on conv_id and a
+  partition-local ``rank()``, which the bucketed write reuses), rewriting
+  the table back to one-row-per-key — after which reads are plain scans
+  again. Run every K epochs or by delta-file-count policy; replay-safe via
+  its own fence.
 - **compaction epochs are fused**: the epoch that triggers a compaction is
   not appended first (a delta the compaction would read straight back and
   rewrite). ``compact_with_epoch`` hands its events to the compaction
@@ -64,8 +67,8 @@ from .schemas import TRANSCRIPT_KEY, payload_columns
 def _clustered_plan(table: LakeTable, key: list[str]) -> tuple[str, int] | None:
     """(cluster_col, num_partitions) when the table's spec murmur-buckets a
     key column — the layout under which a single ``repartition(N, col)``
-    serves the dedupe aggregation, the semi join-back, AND the partitioned
-    write (``arrange=False``): N is the shuffle-partition count rounded up to
+    serves the partition-local winner selection AND the partitioned write
+    (``arrange=False``): N is the shuffle-partition count rounded up to
     a multiple of the bucket count so the task id determines the bucket
     (lake/partitioning.py:mbucket). xxhash64 ``bucket`` specs return None —
     their bucket value is not derivable from Spark's task assignment."""
@@ -162,10 +165,10 @@ def append_delta(
     anyway, so a per-epoch dedupe is pure compression — it removes the only
     table-wide shuffle-with-aggregation in the append path (the remaining
     exchange just clusters rows by partition value for the writer). Enable it
-    when epochs are huge and duplicate-heavy (many updates of the same turn
-    inside one epoch), where fewer delta rows are worth the shuffle —
-    measured at 2.7 events/key/epoch (32M-event replay): +31%/+10% events/s
-    at 2/8 cores (PipelineConfig.mor_dedupe_appends exposes this)."""
+    when write bytes matter more than CPU: on a 4-CPU host (perfbench
+    medians, 5 pairs) it cut write_amp 0.758 -> 0.302 on mor-replay-skewed
+    and 0.839 -> 0.665 on stream-open-loop, at +25% and +60% CPU-s per
+    Mevent (PipelineConfig.mor_dedupe_appends exposes this)."""
     key = key or TRANSCRIPT_KEY
     if fence_key is not None and epoch_id is not None:
         if table.epoch_already_applied(fence_key, epoch_id):

@@ -65,13 +65,14 @@ class PipelineConfig:
     # (append_delta(dedupe=True); no effect on an epoch folded into a
     # compaction, whose dedupe collapses it anyway). Pure compression — read-time/compaction
     # winner selection resolves per-key versions either way, so final state
-    # is identical. Measured at the 32M-event/2-epoch replay (2.7 events per
-    # key per epoch, quiet host): ON = 169k/463k events/s at 2/8 cores vs
-    # OFF = 129k/421k — a throughput win at every core count that grows with
-    # the feed's duplicate rate, bought with one extra narrow-agg + join-back
-    # shuffle per epoch. OFF stays the default because at ~1 event/key/epoch
-    # (a typical binlog tailing window) the extra shuffle is pure overhead,
-    # and the appended deltas then carry exact per-event lineage rows.
+    # is identical. Measured on a 4-CPU host, perfbench `--trace 0`, 5
+    # alternating pairs each, dedupe ON vs OFF (medians): mor-replay-skewed
+    # write_amp 0.758 -> 0.302 but cpu_s_per_mevent 89 -> 111 (+25%);
+    # stream-open-loop write_amp 0.839 -> 0.665 but cpu_s_per_mevent
+    # 159 -> 254 (+60%). OFF stays the default: the per-epoch dedupe shuffle
+    # costs more CPU than the smaller deltas save, and the appended deltas
+    # then carry exact per-event lineage rows. Turn it on where write
+    # bytes, not CPU, are the scarce resource.
     mor_dedupe_appends: bool = False
     # NULL-key policy for the clustered (mbucket-layout) dedupe the MoR path
     # uses in deduped appends and compaction (cdc/dedupe.py contract):

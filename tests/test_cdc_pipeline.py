@@ -341,20 +341,3 @@ def test_metrics_and_lineage_recorded(spark, tmp_path, feed):
     assert any(set(c.metrics.get("applied", {})) & {"insert", "update"} for c in commits)
     # epoch fences recorded on every commit
     assert all(c.epoch and c.epoch["fence_key"] == "cdc-pipeline" for c in commits)
-
-
-def test_salted_dedupe_matches_unsalted(spark):
-    """dedupe_latest_salted (two-stage narrow max over (key, salt) then key,
-    for single-key-dominated batches) must select exactly the same winners as
-    the plain narrow-agg dedupe — including deletes-as-winners."""
-    from openmrs_module_epts_etl_spark.cdc.dedupe import dedupe_latest, dedupe_latest_salted
-
-    feed = generate_feed(
-        spark,
-        FeedSpec(n_events=3000, n_convs=2, max_turns=3, hot_key_fraction=0.9, n_hot_convs=1),
-        num_partitions=4,
-    ).drop("delivery_seq")
-    key = ["conv_id", "turn_idx"]
-    a = dedupe_latest(feed, key=key).orderBy(*key).toPandas()
-    b = dedupe_latest_salted(feed, key=key, salt_buckets=7).orderBy(*key).toPandas()
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))

@@ -2,10 +2,11 @@
 
 The claim under test (cdc/dedupe.py:dedupe_latest_clustered,
 lake/partitioning.py:mbucket): a single ``repartition(N, conv_id)`` serves
-the winner aggregation, the semi join-back, AND the partitioned write —
+the partition-local rank() winner selection AND the partitioned write —
 task id ``pmod(hash(c), N)`` determines bucket ``pmod(hash(c), n)`` when
 ``N % n == 0`` — so the MoR compaction/dedupe-append plan carries exactly
-ONE exchange and ``arrange=False`` writes stay one-bucket-per-task."""
+ONE exchange and no join, and ``arrange=False`` writes stay
+one-bucket-per-task."""
 
 from __future__ import annotations
 
@@ -74,14 +75,35 @@ def test_clustered_dedupe_matches_plain(spark, feed):
     b = clustered.orderBy("conv_id", "turn_idx").toPandas().reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
 
+    # a (key, lsn) tie at the max keeps every tied row, as dedupe_latest's
+    # (key, lsn) join-back does; a tie below the max keeps none
+    rows = [
+        ("a", 1, 10, "old"),
+        ("a", 1, 12, "t1"),     # tied winners for (a, 1)
+        ("a", 1, 12, "t2"),
+        ("a", 2, 5, "low1"),    # tie below the max
+        ("a", 2, 5, "low2"),
+        ("a", 2, 6, "win"),
+        ("b", 1, 3, "only"),
+    ]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, lsn long, text string")
+    key = ["conv_id", "turn_idx"]
+    plain = dedupe_latest(df, key=key, order_col="lsn")
+    clustered = dedupe_latest_clustered(
+        df, key=key, order_col="lsn", cluster_col="conv_id", num_partitions=4
+    )
+    got = sorted(tuple(r) for r in clustered.collect())
+    assert got == sorted(tuple(r) for r in plain.collect())
+    assert got == [
+        ("a", 1, 12, "t1"), ("a", 1, 12, "t2"), ("a", 2, 6, "win"), ("b", 1, 3, "only"),
+    ]
+
 
 def test_clustered_dedupe_null_key_contract(spark):
-    """Documented contract: plain-equality join-back (the price of exchange
-    locality — eqNullSafe keys compile to coalesce/isnull expression pairs
-    Catalyst can't satisfy from a raw-column repartition), so NULL key/order
-    rows are dropped — but only under the EXPLICIT on_null='drop' opt-out
-    (the default raises; see test_clustered_dedupe_null_key_raises_loudly).
-    The generic dedupe_latest keeps them."""
+    """Documented contract: NULL key/order rows are dropped — but only under
+    the EXPLICIT on_null='drop' opt-out (the default raises; see
+    test_clustered_dedupe_null_key_raises_loudly). The generic dedupe_latest
+    keeps them."""
     rows = [
         ("a", 1, 10, "x"),
         ("a", 1, 11, "y"),      # winner for (a, 1)
@@ -99,19 +121,22 @@ def test_clustered_dedupe_null_key_contract(spark):
     assert kept.count() == 3
 
 
-def test_clustered_dedupe_two_exchanges_join_local(spark, feed):
-    """The whole point: exactly TWO Exchanges — the payload cluster
-    repartition and the narrow (key, order) repartition; the aggregation,
-    the semi-join, and the output carry the cluster partitioning with no
-    further exchange (requires spark.sql.requireAllClusterKeysForCoPartition
-    = false, set in session.py)."""
+def _exchanges_and_joins(df) -> tuple[int, bool, str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("Exchange "), "Join" in plan, plan
+
+
+def test_clustered_dedupe_one_exchange_no_join(spark, feed):
+    """The whole point: exactly ONE Exchange — the payload cluster
+    repartition — and no join; the partition-local rank() and the output
+    carry the cluster partitioning with no further exchange."""
     clustered = dedupe_latest_clustered(
         feed, order_col="lsn", cluster_col="conv_id", num_partitions=32
     )
-    plan = clustered._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = plan.count("+- Exchange") + plan.count(":- Exchange")
-    assert n_exchanges == 2, plan
-    assert "ShuffledHashJoin" in plan
+    n_exchanges, has_join, plan = _exchanges_and_joins(clustered)
+    assert n_exchanges == 1, plan
+    assert not has_join, plan
+    assert "WindowGroupLimit" in plan, plan
 
 
 def test_mor_pipeline_mbucket_clustered_state(spark, tmp_path, feed):
@@ -171,8 +196,7 @@ def test_compaction_write_is_exchange_free(spark, tmp_path, feed):
 def test_clustered_dedupe_null_key_raises_loudly(spark):
     """The non-null feed contract is enforced, not assumed: a NULL in any
     key/order column must RAISE at execution (on_null='error', the default)
-    instead of silently dropping the row through the plain-equality
-    join-back — the round-3 review asked for exactly this loud path."""
+    instead of silently dropping the row."""
     rows = [("a", 1, 10, "x"), (None, 2, 11, "y")]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, lsn long, text string")
     out = dedupe_latest_clustered(
@@ -205,10 +229,13 @@ def test_clustered_dedupe_guard_keeps_one_exchange(spark):
         F.col("id").alias("lsn"),
         F.lit("payload").alias("text"),
     )
-    plan = dedupe_latest_clustered(
+    guarded = dedupe_latest_clustered(
         df, key=["conv_id", "turn_idx"], order_col="lsn",
         cluster_col="conv_id", num_partitions=8,
-    )._jdf.queryExecution().executedPlan().toString()
-    # two exchanges total: the payload clustering + the narrow (key, order)
-    # projection — identical to the unguarded plan shape
-    assert plan.count("Exchange hashpartitioning") == 2
+    )
+    # one exchange total: the payload clustering — identical to the
+    # unguarded plan shape
+    n_exchanges, has_join, plan = _exchanges_and_joins(guarded)
+    assert n_exchanges == 1, plan
+    assert "Exchange hashpartitioning" in plan, plan
+    assert not has_join, plan
